@@ -123,6 +123,19 @@ object GraftExtensions {
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] = {
     def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical
     def active = SparkSession.active
+    // one hybrid count over either manifest shape: `manifest` opens the
+    // second argument as a flat manifest dir or a two-level root
+    def countRange(fn: String, sig: String,
+        manifest: String => graft.ops.Layout.Manifest) =
+      (args: Seq[Expression]) => {
+        expectArgs(fn, sig, args, 5)
+        val n = graft.ops.Layout.countRange(active, strLit(args(0), fn),
+          manifest(strLit(args(1), fn)), strLit(args(2), fn),
+          org.apache.spark.sql.functions.lit(longLit(args(3), fn)),
+          org.apache.spark.sql.functions.lit(longLit(args(4), fn)))
+        plan(active.range(1).select(
+          org.apache.spark.sql.functions.lit(n).as("n_rows")))
+      }
     Seq(
       "graft_snapshot" -> ((args: Seq[Expression]) => {
         expectArgs("graft_snapshot", "dataDir, manifestDir", args, 2)
@@ -592,36 +605,12 @@ object GraftExtensions {
       // `_grouped` takes a statsManifestPartitioned ROOT instead of a
       // flat manifest dir — the group rollup prunes first, so the
       // driver never collects the whole listing.
-      "graft_count_range" -> ((args: Seq[Expression]) => {
-        expectArgs("graft_count_range",
-          "dataDir, manifestDir, colName, lo, hi", args, 5)
-        val s = active
-        val n = graft.ops.Layout.countRange(s,
-          strLit(args(0), "graft_count_range"),
-          s.read.parquet(strLit(args(1), "graft_count_range")),
-          strLit(args(2), "graft_count_range"),
-          org.apache.spark.sql.functions.lit(
-            longLit(args(3), "graft_count_range")),
-          org.apache.spark.sql.functions.lit(
-            longLit(args(4), "graft_count_range")))
-        plan(s.range(1).select(
-          org.apache.spark.sql.functions.lit(n).as("n_rows")))
-      }),
-      "graft_count_range_grouped" -> ((args: Seq[Expression]) => {
-        expectArgs("graft_count_range_grouped",
-          "dataDir, manifestRoot, colName, lo, hi", args, 5)
-        val s = active
-        val n = graft.ops.Layout.countRangeGrouped(s,
-          strLit(args(0), "graft_count_range_grouped"),
-          strLit(args(1), "graft_count_range_grouped"),
-          strLit(args(2), "graft_count_range_grouped"),
-          org.apache.spark.sql.functions.lit(
-            longLit(args(3), "graft_count_range_grouped")),
-          org.apache.spark.sql.functions.lit(
-            longLit(args(4), "graft_count_range_grouped")))
-        plan(s.range(1).select(
-          org.apache.spark.sql.functions.lit(n).as("n_rows")))
-      }),
+      "graft_count_range" -> countRange("graft_count_range",
+        "dataDir, manifestDir, colName, lo, hi",
+        p => graft.ops.Layout.Manifest.Rows(active.read.parquet(p))),
+      "graft_count_range_grouped" -> countRange("graft_count_range_grouped",
+        "dataDir, manifestRoot, colName, lo, hi",
+        graft.ops.Layout.Manifest.TwoLevel),
       // the incremental twin: cluster ONLY files added since
       // baseVersion (the last optimized version); base files and their
       // DV addresses carry forward untouched. Returns the new

@@ -672,8 +672,9 @@ object Soak {
           s"$mfpDir/mf", groupSize = 256L).count()
       }
       val rPruneG = measure(s"pruned_read_grouped_${mfTag}_files") {
-        val pruned = ops.Layout.prunedReadGrouped(spark, s"$mfDir/t",
-          s"$mfpDir/mf", "k", lit(mfRows / 2), lit(mfRows / 2 + 999L))
+        val pruned = ops.Layout.prunedRead(spark, s"$mfDir/t",
+          ops.Layout.Manifest.TwoLevel(s"$mfpDir/mf"), "k",
+          lit(mfRows / 2), lit(mfRows / 2 + 999L))
         pruned.count() // exercise the pruned scan end to end
         pruned.inputFiles.length.toLong // = collected surviving paths
       }
@@ -703,7 +704,8 @@ object Soak {
         val keys = spark.createDataset(
           (0 until 500).map(i => (mfRows + 20000L) / 500 * i))
           .toDF("k")
-        ops.Layout.keyTouchedFiles(fullManifest, keys, "k").length.toLong
+        ops.Layout.joinSkipFiles(fullManifest, keys, "k").collect()
+          .length.toLong
       }
       val rVac = measure(s"vacuum_orphans_${mfTag}_files") {
         val (nDel, nKeep) = ops.Layout.vacuumOrphans(spark, s"$mfDir/t",
@@ -851,8 +853,8 @@ object Soak {
         s"$gmfDir/mf", groupSize = 64L)
       quiesce()
       val rGrouped = measure(s"takedown_grouped_address_${tdFiles}_files") {
-        ops.Layout.deletionVectorsForKeysGrouped(spark, s"$tdDir/t",
-          s"$gmfDir/mf",
+        ops.Layout.deletionVectorsForKeysPruned(spark, s"$tdDir/t",
+          ops.Layout.Manifest.TwoLevel(s"$gmfDir/mf"),
           spark.range(tdRows / 2, tdRows / 2 + 2000L)
             .select(col("id").as("k")), "k")
           .count()

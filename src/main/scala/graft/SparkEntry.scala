@@ -2843,7 +2843,8 @@ object SparkEntry {
         "l_orderkey", targetRowsPerFile = 2000L)
       ops.Layout.statsManifestPartitioned(s, s"$tmp/sorted",
         Seq("l_orderkey"), s"$tmp/mf", groupSize = 4L)
-      ops.Layout.prunedReadGrouped(s, s"$tmp/sorted", s"$tmp/mf",
+      ops.Layout.prunedRead(s, s"$tmp/sorted",
+          ops.Layout.Manifest.TwoLevel(s"$tmp/mf"),
           "l_orderkey", lit(1000L), lit(3000L))
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_items"),
@@ -2866,7 +2867,8 @@ object SparkEntry {
         Seq("l_orderkey"), s"$tmp/mf", groupSize = 4L)
       val dv = ops.Layout.deletionVectors(s, s"$tmp/sorted",
         col("l_returnflag") === "R")
-      ops.Layout.prunedReadGroupedWithDeletes(s, s"$tmp/sorted", s"$tmp/mf",
+      ops.Layout.prunedReadWithDeletes(s, s"$tmp/sorted",
+          ops.Layout.Manifest.TwoLevel(s"$tmp/mf"),
           "l_orderkey", lit(1000L), lit(3000L), dv)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_items"),
@@ -2895,7 +2897,8 @@ object SparkEntry {
         .write.mode("append").parquet(s"$tmp/sorted")
       ops.Layout.extendManifestGrouped(s, s"$tmp/sorted", s"$tmp/mf",
         Seq("l_orderkey"), groupSize = 4L)
-      ops.Layout.prunedReadGrouped(s, s"$tmp/sorted", s"$tmp/mf",
+      ops.Layout.prunedRead(s, s"$tmp/sorted",
+          ops.Layout.Manifest.TwoLevel(s"$tmp/mf"),
           "l_orderkey", lit(1000L), lit(3000L))
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_items"),
@@ -2920,9 +2923,10 @@ object SparkEntry {
         Seq("l_orderkey"), s"$tmp/mf", groupSize = 4L)
       val keys = t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 17 === 0).select("l_orderkey")
-      val dv = ops.Layout.deletionVectorsForKeysGrouped(
-        s, s"$tmp/sorted", s"$tmp/mf", keys, "l_orderkey")
-      ops.Layout.prunedReadGroupedWithDeletes(s, s"$tmp/sorted", s"$tmp/mf",
+      val dv = ops.Layout.deletionVectorsForKeysPruned(s, s"$tmp/sorted",
+        ops.Layout.Manifest.TwoLevel(s"$tmp/mf"), keys, "l_orderkey")
+      ops.Layout.prunedReadWithDeletes(s, s"$tmp/sorted",
+          ops.Layout.Manifest.TwoLevel(s"$tmp/mf"),
           "l_orderkey", lit(1000L), lit(3000L), dv)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_items"),
@@ -6460,8 +6464,9 @@ object SparkEntry {
       val dim = t(s, dir, "part")
         .filter(col("p_partkey") % 6000 === 7)
         .select(col("p_partkey").as("l_partkey"), col("p_brand"))
-      val pruned = ops.Layout.joinSkipReadGrouped(s, s"$tmp/t",
-        s"$tmp/mf", dim, "l_partkey")
+      val pruned = ops.Layout.joinSkipRead(s, s"$tmp/t",
+        Some(ops.Layout.Manifest.TwoLevel(s"$tmp/mf")), None, dim,
+        "l_partkey")
       val nFiles = pruned.inputFiles.length
       require(nFiles > 0 && nFiles < 12,
         s"grouped join skipping admitted $nFiles of 12 files")
@@ -7290,14 +7295,16 @@ object SparkEntry {
         filesTab.filter(col("part_p").isNull).count() == 0,
         "grouped manifest must record every file's partition tuple")
       // phase 1: the full snapshot through the grouped layout
-      val snap = ops.Layout.prunedReadGrouped(s, s"$tmp/t", s"$tmp/mf",
+      val snap = ops.Layout.prunedRead(s, s"$tmp/t",
+        ops.Layout.Manifest.TwoLevel(s"$tmp/mf"),
         "o_orderkey", lit(0L), lit(Long.MaxValue))
       require(snap.columns.contains("p"),
         "grouped pruned read must reconstruct the partition column")
       // phase 2: range probe composed with a partition filter — the
       // executed scan prunes partitions from recorded tuples (no
       // listing), on top of the group/stats admission
-      val probed = ops.Layout.prunedReadGrouped(s, s"$tmp/t", s"$tmp/mf",
+      val probed = ops.Layout.prunedRead(s, s"$tmp/t",
+        ops.Layout.Manifest.TwoLevel(s"$tmp/mf"),
         "o_orderkey", lit(100L), lit(2000L)).filter(col("p") === 2)
       probed.collect()
       val numFiles = probed.queryExecution.executedPlan.collectFirst {
@@ -7320,7 +7327,8 @@ object SparkEntry {
         .filter(col("part_p").isNull).count() == 0,
         "grouped extend must record the new files' partition tuples")
       // phase 3: probe isolated to the new wave, one partition
-      val wave = ops.Layout.prunedReadGrouped(s, s"$tmp/t", s"$tmp/mf",
+      val wave = ops.Layout.prunedRead(s, s"$tmp/t",
+        ops.Layout.Manifest.TwoLevel(s"$tmp/mf"),
         "o_orderkey", lit(3000000L), lit(Long.MaxValue))
         .filter(col("p") === 3)
       def agg(df: DataFrame, phase: Int) = df

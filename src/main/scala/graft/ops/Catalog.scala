@@ -70,9 +70,13 @@ object Catalog {
     * refs, and retries — so no concurrent writer's artifacts are ever
     * silently dropped, and every version's world is derived from its
     * immediate predecessor (linearizable history). `prepare` must
-    * therefore be safe to run more than once (idempotent artifact
-    * preparation: immutable dirs keyed by content/uuid, the same rule
-    * every commit path already follows).
+    * therefore be a PURE function of `base`, not merely safe to run
+    * more than once: the loop memoizes its result per base and reuses
+    * it on every retry against an unchanged base, so any output that
+    * depends on something other than `base` (a clock, a counter, state
+    * read outside the refs) is frozen at the first attempt. Its
+    * artifacts follow the rule every commit path already does:
+    * immutable dirs keyed by content/uuid.
     *
     * Bounded, with a SEPARATE budget per conflict kind — the two mean
     * opposite things about progress. A STALE EXPECTED (the committed

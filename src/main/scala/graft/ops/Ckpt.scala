@@ -87,9 +87,19 @@ object Ckpt {
     * a full eager materialization per table (≈8 extra jobs per
     * NearDupIndex save) purely as insurance. The plan walk is exact
     * for file relations: every `HadoopFsRelation`'s resolved root
-    * paths are checked against `path`, no filesystem calls. */
+    * paths are checked against `path`, qualified first (relation roots
+    * are qualified, so a relative or scheme-less `path` must be too),
+    * with no filesystem I/O. Under the lazy [[EagerConf]] opt-out the
+    * walk cannot be trusted — a pending upstream checkpoint hides its
+    * file reads behind an opaque `LogicalRDD` — so it pins always. */
   def pinnedIfReadsFrom[T](ds: Dataset[T], path: String): Dataset[T] = {
-    val target = new org.apache.hadoop.fs.Path(path).toUri.getPath
+    val spark = ds.sparkSession
+    if (!spark.conf.get(EagerConf, "true").equalsIgnoreCase("true"))
+      return forced(ds)
+    val raw = new org.apache.hadoop.fs.Path(path)
+    val target = graft.io.PathResolver
+      .fsFor(path, spark.sparkContext.hadoopConfiguration)
+      .makeQualified(raw).toUri.getPath
     def under(p: org.apache.hadoop.fs.Path): Boolean = {
       val s = p.toUri.getPath
       s == target || s.startsWith(target + "/")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.Ckpt.CkptSyntax
+import scala.language.implicitConversions
 
 /** Multi-dimensional data layout via Z-order (Morton) curves: interleave
   * the bits of two clustering keys so that rows close in BOTH dimensions
@@ -180,7 +181,7 @@ object Layout {
     // a mixed layout no single read can plan. The FULL optimizeZorder
     // is the partitioned path (it rewrites every live row, so the
     // whole new version materializes the partition columns uniformly).
-    require(!manifest.columns.exists(_.startsWith("part_")),
+    require(!isPartitioned(manifest),
       "optimizeZorderDelta cannot cluster a hive-partitioned version " +
         "(its manifest carries part_* tuples): keeping base files in " +
         "col=value dirs while delta files materialize the partition " +
@@ -535,8 +536,9 @@ object Layout {
   /** [[mergeOnReadCommit]] past the flat-manifest ceiling — MERGE over
     * a [[statsManifestPartitioned]] (two-level) layout. Matched keys'
     * addresses resolve through the GROUP-pruned scan
-    * ([[deletionVectorsForKeysGrouped]]: rollup first, file rows only
-    * at surviving partitions), upserts land as one append commit, and
+    * ([[deletionVectorsForKeysPruned]] over a [[Manifest.TwoLevel]]:
+    * rollup first, file rows only at surviving partitions), upserts
+    * land as one append commit, and
     * the grouped manifest absorbs the new files in place via
     * [[extendManifestGrouped]]'s O(new data) tail-group contract.
     * Returns the grown DV set (old ∪ new addresses — grow-only under
@@ -555,8 +557,8 @@ object Layout {
       changes: DataFrame, keyCol: String, deleteCol: String = "is_delete",
       statsCols: Seq[String], groupSize: Long = 8192L): DataFrame = {
     val keys = changes.select(col(keyCol)).distinct().ckpt
-    val newAddrs = deletionVectorsForKeysGrouped(spark, dataDir,
-      manifestRoot, keys, keyCol)
+    val newAddrs = deletionVectorsForKeysPruned(spark, dataDir,
+      Manifest.TwoLevel(manifestRoot), keys, keyCol)
     val upserts = changes
       .filter(!coalesce(col(deleteCol).cast("boolean"), lit(false)))
       .drop(deleteCol)
@@ -567,6 +569,24 @@ object Layout {
     extendManifestGrouped(spark, dataDir, manifestRoot, statsCols,
       groupSize)
     dv.map(_.unionAll(newAddrs)).getOrElse(newAddrs)
+  }
+
+  /** The shape of a table's stats manifest. Every manifest consumer
+    * runs the same two steps over it — [[admit]] the file rows that can
+    * hold a match, then [[scan]] exactly those files — so the flat and
+    * the two-level layout share one read path instead of a parallel
+    * verb family. A `DataFrame` of manifest rows converts implicitly,
+    * so flat callers pass their rows unchanged. */
+  sealed trait Manifest
+  object Manifest {
+    /** Flat rows, one per data file ([[statsManifest]],
+      * [[extendManifest]], [[commitAppend]] unions). */
+    final case class Rows(rows: DataFrame) extends Manifest
+    /** A [[statsManifestPartitioned]] root: the per-group rollup at
+      * `root/groups`, per-file rows at `root/files` partitioned by
+      * `graft_group`. */
+    final case class TwoLevel(root: String) extends Manifest
+    implicit def fromRows(rows: DataFrame): Manifest = Rows(rows)
   }
 
   /** Per-file column min/max statistics — the data-skipping manifest.
@@ -587,32 +607,10 @@ object Layout {
   def statsManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one stats column")
-    // eager checkpoint: the zero-row diff below lists the stats' file
-    // column, and every consumer probes the manifest repeatedly — the
-    // aggregate is O(#files) rows, so pinning it is planner-scale
     val scan = spark.read.parquet(dir)
     // ceiling check BEFORE the stats aggregate: the scan's file-index
     // snapshot is already resolved driver-side, so the count is free
     checkManifestCeiling(spark, scan.inputFiles.length.toLong, dir)
-    // hive-partitioned tables: record each file's partition tuple as
-    // `part_<col>` (every row of a file shares it) — the Iceberg
-    // manifest-entry model — so snapshot reads can reconstruct the
-    // partition columns and prune partitions with zero listings
-    val aggs = statsAggs(cols) ++
-      partitionColsOf(scan).map(c => first(col(c)).as(s"part_$c"))
-    val stats = scan
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint(eager = true)
-    // zero-row candidates come from the SCAN'S OWN file-index snapshot
-    // (inputFiles), never a second directory listing: a file appended
-    // while the aggregate runs must stay ABSENT (a later extendManifest
-    // picks it up with real stats), not be recorded as a zero-row entry
-    // that pruned reads would skip forever
-    val statsFiles = stats.select("file").collect()
-      .map(r => uriPath(r.getString(0))).toSet
-    val zeroRow = scan.inputFiles
-      .filterNot(p => statsFiles.contains(uriPath(p)))
     // single partition on the RETURNED frame: a manifest is planner-
     // scale by contract (≤ the maxFiles ceiling, ~40 bytes/row), and
     // callers persist it per version — without this, each persist
@@ -620,8 +618,42 @@ object Layout {
     // pays per-file open/footer cost (guide §6 output sizing; the
     // Iceberg posture: manifests are written single-threaded). The
     // stats aggregate itself still ran distributed (checkpointed
-    // above); only the already-materialized rows funnel into one task.
-    withZeroRowEntries(stats, zeroRow.toSeq).coalesce(1)
+    // inside fileStats); only the already-materialized rows funnel
+    // into one task.
+    fileStats(scan, scan.inputFiles.toSeq, cols).coalesce(1)
+  }
+
+  /** The stats rows of the files `scan` reads — the one aggregate every
+    * manifest build and extend shares: row count, exact bytes, and
+    * min/max/null count per column, grouped by `_metadata.file_path`.
+    * Hive-partitioned scans also record each file's partition tuple as
+    * `part_<col>` (every row of a file shares it) — the Iceberg
+    * manifest-entry model — so snapshot reads can reconstruct the
+    * partition columns and prune partitions with zero listings.
+    *
+    * `files` is the set the scan covers: each one the aggregate emits
+    * no row for is a zero-row file and gets a synthesized entry
+    * ([[withZeroRowEntries]]). It must come from the scan's OWN
+    * file-index snapshot (inputFiles, or the explicit fresh-file list),
+    * never a second directory listing: a file appended while the
+    * aggregate runs must stay ABSENT (a later extend picks it up with
+    * real stats), not be recorded as a zero-row entry that pruned reads
+    * would skip forever. */
+  private def fileStats(scan: DataFrame, files: Seq[String],
+      cols: Seq[String]): DataFrame = {
+    val aggs = statsAggs(cols) ++
+      partitionColsOf(scan).map(c => first(col(c)).as(s"part_$c"))
+    // eager checkpoint: the zero-row diff below lists the stats' file
+    // column, and every consumer probes the manifest repeatedly — the
+    // aggregate is O(#files) rows, so pinning it is planner-scale
+    val stats = scan
+      .groupBy(col("_metadata.file_path").as("file"))
+      .agg(aggs.head, aggs.tail: _*)
+      .localCheckpoint(eager = true)
+    val statsFiles = stats.select("file").collect()
+      .map(r => uriPath(r.getString(0))).toSet
+    withZeroRowEntries(stats,
+      files.filterNot(p => statsFiles.contains(uriPath(p))))
   }
 
   /** MANIFEST-OF-MANIFESTS — the read path past the flat ceiling. The
@@ -634,14 +666,16 @@ object Layout {
     * a tiny per-group rollup (`graft_group`, n_files, min/max per col)
     * is the only table a range probe reads in full. A consumer then
     * collects O(#surviving-groups) rollup rows + the file paths of
-    * just those groups — never the whole listing.
+    * just those groups — never the whole listing. Pass the root as a
+    * [[Manifest.TwoLevel]] to any manifest verb.
     *
-    * No ceiling check here — bounding driver collects is this layout's
-    * whole point. (Spark's own FileIndex still resolves the directory
-    * listing driver-side at BUILD time, as it does for any read of the
-    * table; what this structure removes is every CONSUMER re-collecting
-    * O(#files) paths per probe, and the build-time zero-row diff runs
-    * as a distributed anti-join, collecting only the missing files.)
+    * No ceiling check here — bounding CONSUMER collects is this
+    * layout's whole point. (Spark's own FileIndex still resolves the
+    * directory listing driver-side at BUILD time, as it does for any
+    * read of the table, and the build's zero-row diff is the same
+    * driver set difference over that listing as the flat build's;
+    * what this structure removes is every consumer re-collecting
+    * O(#files) paths per probe.)
     *
     * Build cost: the same distributed stats aggregate as
     * [[statsManifest]], one planner-scale window (a single-reducer
@@ -660,99 +694,63 @@ object Layout {
       groupSize: Long = 8192L): DataFrame = {
     require(cols.nonEmpty, "need at least one stats column")
     require(groupSize > 0, s"groupSize must be positive, got $groupSize")
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
     val scan = spark.read.parquet(dir)
-    // hive-partitioned tables: record partition tuples as `part_<col>`,
-    // exactly as the flat [[statsManifest]] does — the grouped read
-    // paths share [[manifestRead]], so the tuples make snapshot reads
-    // reconstruct partition columns with zero listings here too
-    val aggs = statsAggs(cols) ++
-      partitionColsOf(scan).map(c => first(col(c)).as(s"part_$c"))
-    val stats = scan
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint(eager = true)
-    // zero-row diff DISTRIBUTED (flat statsManifest collects all stats
-    // paths for this; here only the MISSING files — normally none —
-    // ever reach the driver). inputFiles is the scan's own resolved
-    // snapshot, the same no-second-listing contract as the flat build.
-    val inv = spark.createDataset(scan.inputFiles.toIndexedSeq)
-      .toDF("graft_file")
-      .withColumn("graft_p", uriPathCol(col("graft_file")))
-    val missing = inv
-      .join(stats.select(uriPathCol(col("file")).as("graft_p")),
-        Seq("graft_p"), "left_anti")
-      .select("graft_file").collect().map(_.getString(0))
-    val all = withZeroRowEntries(stats, missing.toSeq)
-    // contiguous range groups: files sorted by the lead column's min
-    // chunk into groups of `groupSize`, so a range probe's surviving
-    // groups are a contiguous (and usually tiny) band
-    val lead = cols.head
-    val w = Window.orderBy(col(s"min_$lead").asc_nulls_last, col("file"))
-    val grouped = all.withColumn("graft_group",
-      floor((row_number().over(w).cast("long") - 1L) / lit(groupSize))
-        .cast("int"))
+    // partition tuples are recorded exactly as the flat build does, and
+    // the two-level reads share [[scan]], so snapshot reads reconstruct
+    // partition columns with zero listings here too. A build is
+    // grouping onto an empty layout: no tail group, no spare capacity.
+    val grouped = assignGroups(fileStats(scan, scan.inputFiles.toSeq, cols),
+      cols.head, groupSize, tailGroup = -1, cap = 0L)
     grouped.write.mode("overwrite").partitionBy("graft_group")
       .parquet(s"$manifestDir/files")
-    val rollAggs = count(lit(1)).as("n_files") +:
-      sum(col("n_rows")).as("n_rows") +:
-      cols.flatMap(c => Seq(
-        min(col(s"min_$c")).as(s"min_$c"), max(col(s"max_$c")).as(s"max_$c")))
-    val groups = grouped.groupBy("graft_group")
-      .agg(rollAggs.head, rollAggs.tail: _*)
-    groups.write.mode("overwrite").parquet(s"$manifestDir/groups")
+    groupRollup(grouped, cols)
+      .write.mode("overwrite").parquet(s"$manifestDir/groups")
     spark.read.parquet(s"$manifestDir/groups")
   }
 
-  /** [[prunedRead]] against a [[statsManifestPartitioned]] layout: the
-    * group rollup (tiny) filters first, the per-file table is read
-    * ONLY at the surviving `graft_group=` partitions (directory-level
-    * pruning — non-surviving groups' file rows are never even
-    * scanned), and the driver collects the group ids plus the
-    * surviving file paths. For a selective probe over a range-
-    * clustered build that is O(groups-touched · groupSize) paths —
-    * the flat path's per-probe scan of ALL manifest rows never
-    * happens, and neither does the flat BUILD's refusal past the
-    * ceiling. Result is exact: same residual filter as [[prunedRead]].
-    */
-  def prunedReadGrouped(spark: org.apache.spark.sql.SparkSession,
-      dir: String, manifestDir: String, colName: String,
-      lo: Column, hi: Column): DataFrame = {
-    val survive = col(s"max_$colName") >= lo && col(s"min_$colName") <= hi
-    val gids = spark.read.parquet(s"$manifestDir/groups")
-      .filter(survive)
-      .select("graft_group").collect().map(_.getInt(0))
-    val base =
-      if (gids.isEmpty) spark.read.parquet(dir).limit(0)
-      else {
-        val admitted = spark.read.parquet(s"$manifestDir/files")
-          .filter(col("graft_group").isin(gids.toIndexedSeq: _*))
-          .filter(survive)
-        manifestRead(spark, admitted).getOrElse {
-          val keep = admitted.select("file").collect().map(_.getString(0))
-          explicitFilesRead(spark, dir,
-            admitted.columns.exists(_.startsWith("part_")),
-            keep.toIndexedSeq)
-        }
-      }
-    base.filter(col(colName) >= lo && col(colName) <= hi)
+  /** Contiguous range groups: `rows` sorted by the lead column's min
+    * first fill the `cap` free slots of `tailGroup`, then chunk into
+    * fresh groups of `groupSize` — so a range probe's surviving groups
+    * are a contiguous (and usually tiny) band. The ordering is one
+    * row_number over `rows` through one task (planner-scale stats rows;
+    * the file name breaks min ties so numbering is deterministic). */
+  private def assignGroups(rows: DataFrame, lead: String, groupSize: Long,
+      tailGroup: Int, cap: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.orderBy(col(s"min_$lead").asc_nulls_last, col("file"))
+    rows.withColumn("graft_rn", row_number().over(w).cast("long"))
+      .withColumn("graft_group",
+        when(col("graft_rn") <= cap, lit(math.max(tailGroup, 0)))
+          .otherwise(lit(tailGroup + 1L) +
+            floor((col("graft_rn") - cap - 1L) / lit(groupSize)))
+          .cast("int"))
+      .drop("graft_rn")
   }
 
-  /** Merge-on-read over the TWO-LEVEL manifest — [[prunedReadGrouped]]
-    * composed with the deletion-vector subtraction: the group rollup
-    * prunes to surviving `graft_group` partitions, file rows are read
-    * only there, and the DV broadcast anti-join runs on the pruned
-    * scan — so a range probe over a DV-mutated table pays
-    * O(surviving files) scan + O(deleted rows) broadcast, never a
-    * table scan. The base stays a fresh parquet scan (with only a
-    * filter on top), so the `_metadata` address columns resolve and
-    * the file-path rendering matches [[deletionVectors]]' (same
-    * contract as [[snapshotReadWithDeletes]]' file-list scan). */
-  def prunedReadGroupedWithDeletes(spark: org.apache.spark.sql.SparkSession,
-      dir: String, manifestDir: String, colName: String,
+  /** The per-group rollup of two-level file rows: file and row counts
+    * plus each stats column's group-wide min/max — the table a probe
+    * reads first. */
+  private def groupRollup(files: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = count(lit(1)).as("n_files") +:
+      sum(col("n_rows")).as("n_rows") +:
+      cols.flatMap(c => Seq(
+        min(col(s"min_$c")).as(s"min_$c"), max(col(s"max_$c")).as(s"max_$c")))
+    files.groupBy("graft_group").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Merge-on-read range probe — [[prunedRead]] over any [[Manifest]]
+    * composed with the deletion-vector subtraction: admission prunes
+    * (through the rollup first on a two-level manifest) and the DV
+    * broadcast anti-join runs on the pruned scan — so a range probe
+    * over a DV-mutated table pays O(surviving files) scan + O(deleted
+    * rows) broadcast, never a table scan. The base stays a fresh
+    * parquet scan (with only a filter on top), so the `_metadata`
+    * address columns resolve and the file-path rendering matches
+    * [[deletionVectors]]' (same contract as [[snapshotReadWithDeletes]]). */
+  def prunedReadWithDeletes(spark: org.apache.spark.sql.SparkSession,
+      dir: String, manifest: Manifest, colName: String,
       lo: Column, hi: Column, dv: DataFrame): DataFrame =
-    applyDv(prunedReadGrouped(spark, dir, manifestDir, colName, lo, hi), dv)
+    applyDv(prunedRead(spark, dir, manifest, colName, lo, hi), dv)
 
   /** Incrementally extend a [[statsManifestPartitioned]] layout after
     * new files land in `dir` — the grouped sibling of [[extendManifest]]
@@ -769,9 +767,9 @@ object Layout {
     * A rebuilt-from-scratch layout can GROUP differently (the build
     * re-sorts all files globally by the lead column's min); the read
     * contract is what extension preserves: group min/max stay exact,
-    * so [[prunedReadGrouped]] over the extended layout returns exactly
-    * the rows the rebuilt layout would (gate q112, spec) — a range
-    * probe may just touch one extra group until the next rebuild.
+    * so [[prunedRead]] over the extended layout returns exactly the
+    * rows the rebuilt layout would (gate q112, spec) — a range probe
+    * may just touch one extra group until the next rebuild.
     *
     * @return the refreshed group rollup (persisted to
     *         `manifestDir/groups`; new file rows appended under
@@ -781,31 +779,19 @@ object Layout {
       groupSize: Long = 8192L): DataFrame = {
     require(cols.nonEmpty, "need at least one stats column")
     require(groupSize > 0, s"groupSize must be positive, got $groupSize")
-    import org.apache.spark.sql.expressions.Window
     val filesTab = spark.read.parquet(s"$manifestDir/files")
     val groups0 = spark.read.parquet(s"$manifestDir/groups")
-    val fresh = newDataFiles(spark, dir, filesTab)
+    // one collect serves the new-file diff and the ceiling check, as in
+    // the flat [[extendManifest]]
+    val known = manifestFileSet(spark, filesTab)
+    val fresh = newDataFilesKnown(spark, dir, known)
     if (fresh.isEmpty) groups0
     else {
-      checkManifestCeiling(spark, filesTab.count() + fresh.length, dir)
-      // partitioned layout (part_<col> columns in the files table):
-      // read the fresh files with basePath so their partition values
-      // resolve — the same contract as the flat [[extendManifest]]
-      val partCols = filesTab.columns.toSeq
-        .filter(_.startsWith("part_")).map(_.stripPrefix("part_"))
-      val reader =
-        if (partCols.isEmpty) spark.read
-        else spark.read.option("basePath", dir)
-      val aggs = statsAggs(cols) ++
-        partCols.map(c => first(col(c)).as(s"part_$c"))
-      val stats = reader.parquet(fresh.toIndexedSeq: _*)
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .localCheckpoint(eager = true) // listed for the zero-row diff
-      val statsFiles = stats.select("file").collect()
-        .map(r => uriPath(r.getString(0))).toSet
-      val zeroRow = fresh.filterNot(p => statsFiles.contains(uriPath(p)))
-      val newAll = withZeroRowEntries(stats, zeroRow.toSeq)
+      checkManifestCeiling(spark, known.size.toLong + fresh.length, dir)
+      // fresh files read with basePath on a partitioned layout, as in
+      // the flat [[extendManifest]]
+      val newAll = fileStats(explicitFilesRead(spark, dir,
+        isPartitioned(filesTab), fresh.toIndexedSeq), fresh.toIndexedSeq, cols)
       // tail-group capacity from the rollup (a #groups-row driver panel)
       val tailRow = groups0.agg(max("graft_group")).head()
       val tailGroup = if (tailRow.isNullAt(0)) -1 else tailRow.getInt(0)
@@ -814,31 +800,15 @@ object Layout {
         else math.max(0L, groupSize -
           groups0.filter(col("graft_group") === tailGroup)
             .select("n_files").head().getLong(0))
-      val lead = cols.head
-      val w = Window.orderBy(col(s"min_$lead").asc_nulls_last, col("file"))
-      val assigned = newAll
-        .withColumn("graft_rn", row_number().over(w).cast("long"))
-        .withColumn("graft_group",
-          when(col("graft_rn") <= cap, lit(math.max(tailGroup, 0)))
-            .otherwise(lit(tailGroup + 1L) +
-              floor((col("graft_rn") - cap - 1L) / lit(groupSize))))
-        .withColumn("graft_group", col("graft_group").cast("int"))
-        .drop("graft_rn")
+      val assigned = assignGroups(newAll, cols.head, groupSize, tailGroup, cap)
         .localCheckpoint(eager = true) // appended AND rolled up below
       assigned.write.mode("append").partitionBy("graft_group")
         .parquet(s"$manifestDir/files")
       // refresh rollup rows for TOUCHED groups only; reuse the rest
       val touched = assigned.select("graft_group").distinct()
         .collect().map(_.getInt(0)).toIndexedSeq
-      val rollAggs = count(lit(1)).as("n_files") +:
-        sum(col("n_rows")).as("n_rows") +:
-        cols.flatMap(c => Seq(
-          min(col(s"min_$c")).as(s"min_$c"),
-          max(col(s"max_$c")).as(s"max_$c")))
-      val refreshed = spark.read.parquet(s"$manifestDir/files")
-        .filter(col("graft_group").isin(touched: _*))
-        .groupBy("graft_group")
-        .agg(rollAggs.head, rollAggs.tail: _*)
+      val refreshed = groupRollup(spark.read.parquet(s"$manifestDir/files")
+        .filter(col("graft_group").isin(touched: _*)), cols)
       // pinned before the overwrite: the union lazily reads the very
       // dir being replaced (same hazard as the index re-publish path).
       // Ckpt.forced: a correctness pin, exempt from the eager-conf
@@ -972,49 +942,28 @@ object Layout {
     * key span" introspection at metadata speed, exact including null
     * semantics (lake formats answer the fully-contained case from
     * stats; the straddle scan closes the gap exactly). Driver work is
-    * one pass over the manifest rows (flat-manifest contract). */
+    * one pass over the admitted manifest rows — on a two-level
+    * manifest only the surviving groups' file rows. */
   def countRange(spark: org.apache.spark.sql.SparkSession, dir: String,
-      manifest: DataFrame, colName: String, lo: Column,
+      manifest: Manifest, colName: String, lo: Column,
       hi: Column): Long = {
     val mn = col(s"min_$colName")
     val mx = col(s"max_$colName")
     val nl = col(s"nulls_$colName")
     val fully = mn >= lo && mx <= hi && nl.isNotNull
-    val disjoint = mn.isNull || mx < lo || mn > hi
-    val agg = manifest.agg(
+    // admission drops the disjoint files (no non-null value in range);
+    // what it keeps is either fully contained or straddling
+    val admitted = admit(spark, manifest, inRange(colName, lo, hi))
+    val agg = admitted.agg(
       sum(when(fully, col("n_rows") - nl).otherwise(lit(0L))).as("meta"),
-      collect_list(when(!fully && !disjoint, col("file"))).as("straddle"))
+      count(when(!fully, 1)).as("straddle"))
       .head()
     val metaCount = if (agg.isNullAt(0)) 0L else agg.getLong(0)
-    val straddle = agg.getSeq[String](1)
     val scanned =
-      if (straddle.isEmpty) 0L
-      else spark.read.parquet(straddle: _*)
+      if (agg.getLong(1) == 0L) 0L
+      else scan(spark, dir, admitted.filter(!fully))
         .filter(col(colName) >= lo && col(colName) <= hi).count()
     metaCount + scanned
-  }
-
-  /** [[countRange]] against a [[statsManifestPartitioned]] two-level
-    * layout — the hybrid count past the flat-manifest ceiling. The
-    * group rollup (tiny) filters first; per-file rows are read ONLY at
-    * surviving `graft_group=` partitions (directory-level pruning),
-    * then classify exactly as the flat path: fully-contained files
-    * contribute `n_rows − nulls_c` from their manifest row, straddlers
-    * scan. Driver collects O(surviving-groups · groupSize) rows —
-    * never the whole listing — so a range count over a 10⁷-file table
-    * touches a contiguous band of group partitions plus O(2 boundary
-    * files) of data. */
-  def countRangeGrouped(spark: org.apache.spark.sql.SparkSession,
-      dir: String, manifestDir: String, colName: String, lo: Column,
-      hi: Column): Long = {
-    val survive = col(s"max_$colName") >= lo && col(s"min_$colName") <= hi
-    val gids = spark.read.parquet(s"$manifestDir/groups")
-      .filter(survive)
-      .select("graft_group").collect().map(_.getInt(0))
-    if (gids.isEmpty) return 0L
-    val fileRows = spark.read.parquet(s"$manifestDir/files")
-      .filter(col("graft_group").isInCollection(gids.toSeq))
-    countRange(spark, dir, fileRows, colName, lo, hi)
   }
 
   /** IS-NOT-NULL file skipping from the manifest's per-file null
@@ -1026,16 +975,12 @@ object Layout {
     * non-null rows). Same probe/read/residual-filter contract as
     * [[prunedRead]]: skipping is planner-scale and lossless. */
   def prunedReadNotNull(spark: org.apache.spark.sql.SparkSession,
-      dir: String, manifest: DataFrame, colName: String): DataFrame = {
+      dir: String, manifest: DataFrame, colName: String): DataFrame =
     // a NULL null-count (legacy manifest upgraded by alignManifestSchema)
     // means "unknown" — keep the file; skipping must stay lossless
-    val keep = manifest
-      .filter(coalesce(col(s"nulls_$colName") < col("n_rows"), lit(true)))
-      .select("file").collect().map(_.getString(0))
-    val base = explicitFilesRead(spark, dir,
-      manifest.columns.exists(_.startsWith("part_")), keep.toIndexedSeq)
-    base.filter(col(colName).isNotNull)
-  }
+    scan(spark, dir, manifest
+      .filter(coalesce(col(s"nulls_$colName") < col("n_rows"), lit(true))))
+      .filter(col(colName).isNotNull)
 
   /** Incrementally maintain a [[statsManifest]] after new files land in
     * `dir` (append-heavy table refresh): list the directory driver-side
@@ -1066,31 +1011,18 @@ object Layout {
       checkManifestCeiling(spark, known.size.toLong + fresh.length, dir)
       // a partitioned manifest (part_<col> columns) needs the fresh
       // files read with basePath so their partition values resolve —
-      // an explicit-leaf-path read would silently lose them
-      val partCols = manifest.columns.toSeq
-        .filter(_.startsWith("part_")).map(_.stripPrefix("part_"))
-      val reader =
-        if (partCols.isEmpty) spark.read
-        else spark.read.option("basePath", dir)
-      val aggs = statsAggs(cols) ++
-        partCols.map(c => first(col(c)).as(s"part_$c"))
-      val stats = reader.parquet(fresh.toIndexedSeq: _*)
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .localCheckpoint(eager = true) // listed for the zero-row diff
-      // fresh files that emitted no stats row are zero-row files —
-      // synthesize their entries so they stop re-listing as "new"
-      val statsFiles = stats.select("file").collect()
-        .map(r => uriPath(r.getString(0))).toSet
-      val zeroRow = fresh.filterNot(p => statsFiles.contains(uriPath(p)))
+      // an explicit-leaf-path read would silently lose them. Fresh
+      // files that emit no stats row are zero-row files — their
+      // synthesized entries stop them re-listing as "new"
+      val stats = fileStats(explicitFilesRead(spark, dir,
+        isPartitioned(manifest), fresh.toIndexedSeq), fresh.toIndexedSeq, cols)
       // single partition, same rationale as [[statsManifest]]'s return:
       // a persisted extend-chain otherwise snowballs part files (each
       // version's write inherits its predecessor's partitions plus the
       // wave's), so version k costs O(k) file opens to read and O(k)
       // task commits to write, with the manifest ceiling bounding rows
       // at planner scale either way
-      alignManifestSchema(manifest, stats)
-        .unionAll(withZeroRowEntries(stats, zeroRow.toSeq)).coalesce(1)
+      alignManifestSchema(manifest, stats).unionAll(stats).coalesce(1)
     }
   }
 
@@ -1202,23 +1134,64 @@ object Layout {
     * from the scan's file list before any of that I/O happens — the
     * file-skipping half of a lake-format reader, without the format.
     * The manifest filter collects only the surviving file PATHS
-    * (O(#files) planner metadata, never data rows). Correctness does
-    * not depend on the layout: overlapping or stale-but-superset
+    * (O(#files) planner metadata, never data rows; on a
+    * [[Manifest.TwoLevel]] only the surviving groups' rows). Correctness
+    * does not depend on the layout: overlapping or stale-but-superset
     * manifests only cost extra files, and the residual filter keeps the
     * result exact — equal to a full scan with the same predicate, which
     * is exactly what the q69 oracle checks.
     */
   def prunedRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-      manifest: DataFrame, colName: String, lo: Column, hi: Column): DataFrame = {
-    val admitted = manifest
-      .filter(col(s"max_$colName") >= lo && col(s"min_$colName") <= hi)
-    val base = manifestRead(spark, admitted).getOrElse {
-      val keep = admitted.select("file").collect().map(_.getString(0))
-      explicitFilesRead(spark, dir,
-        admitted.columns.exists(_.startsWith("part_")), keep.toIndexedSeq)
+      manifest: Manifest, colName: String, lo: Column, hi: Column): DataFrame =
+    scan(spark, dir, admit(spark, manifest, inRange(colName, lo, hi)))
+      .filter(col(colName) >= lo && col(colName) <= hi)
+
+  /** Manifest rows that can hold a match — the admission step every
+    * manifest consumer shares. `test` keeps the rows whose
+    * `min_<c>`/`max_<c>` span can match ([[inRange]], [[holdsKey]]). A
+    * two-level rollup carries the same span columns per group, so
+    * there the test runs on the rollup first, the surviving
+    * `graft_group` ids are collected, and file rows are read only at
+    * those partitions before the same test applies to them: driver
+    * work is O(groups-touched · groupSize) rows, never O(#files). A
+    * flat manifest is the one-group case. */
+  private def admit(spark: org.apache.spark.sql.SparkSession,
+      manifest: Manifest, test: DataFrame => DataFrame): DataFrame =
+    manifest match {
+      case Manifest.Rows(rows) => test(rows)
+      case Manifest.TwoLevel(root) =>
+        val gids = test(spark.read.parquet(s"$root/groups"))
+          .select("graft_group").collect().map(_.getInt(0))
+        test(spark.read.parquet(s"$root/files")
+          .filter(col("graft_group").isInCollection(gids.toSeq)))
     }
-    base.filter(col(colName) >= lo && col(colName) <= hi)
-  }
+
+  /** Range admission: the file's span meets `[lo, hi]`. */
+  private def inRange(colName: String, lo: Column,
+      hi: Column): DataFrame => DataFrame =
+    _.filter(col(s"max_$colName") >= lo && col(s"min_$colName") <= hi)
+
+  /** Key admission: the file's span holds at least one of `keys` — the
+    * range semi-join against the BROADCAST key set that
+    * [[joinSkipFiles]] documents (null stats drop out). */
+  private def holdsKey(keys: DataFrame,
+      keyCol: String): DataFrame => DataFrame =
+    _.join(broadcast(keys.select(col(keyCol).as("graft_k"))),
+      col("graft_k") >= col(s"min_$keyCol") &&
+        col("graft_k") <= col(s"max_$keyCol"), "left_semi")
+
+  /** Read exactly the files the admitted manifest rows name — the one
+    * scan every manifest consumer shares: zero-listing through
+    * [[manifestRead]] when the rows carry bytes, else the explicit-path
+    * read ([[explicitFilesRead]], `basePath`-correct for partitioned
+    * manifests). */
+  private def scan(spark: org.apache.spark.sql.SparkSession, dir: String,
+      admitted: DataFrame): DataFrame =
+    manifestRead(spark, admitted).getOrElse {
+      val keep = admitted.select("file").collect().map(_.getString(0))
+      explicitFilesRead(spark, dir, isPartitioned(admitted),
+        keep.toIndexedSeq)
+    }
 
   /** TIME-TRAVEL read of an append-only table: a stats manifest is a
     * consistent snapshot — parquet files are immutable and appends only
@@ -1232,11 +1205,11 @@ object Layout {
     * concurrent append cannot tear the snapshot. */
   def snapshotRead(spark: org.apache.spark.sql.SparkSession, dir: String,
       manifest: DataFrame): DataFrame =
-    manifestRead(spark, manifest).getOrElse {
-      val files = manifest.select("file").collect().map(_.getString(0))
-      explicitFilesRead(spark, dir,
-        manifest.columns.exists(_.startsWith("part_")), files.toIndexedSeq)
-    }
+    scan(spark, dir, manifest)
+
+  /** Whether manifest rows carry hive partition tuples (`part_<col>`). */
+  private def isPartitioned(manifest: DataFrame): Boolean =
+    manifest.columns.exists(_.startsWith("part_"))
 
   /** Explicit-path listing fallback shared by every manifest consumer:
     * a PARTITIONED manifest's surviving files must be read with
@@ -1444,13 +1417,41 @@ object Layout {
   def bloomIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       colName: String, mBits: Int = 4096, kHashes: Int = 3): DataFrame = {
     require(mBits > 0 && kHashes >= 1, s"need mBits > 0, kHashes >= 1")
-    spark.read.parquet(dir)
-      .select(col("_metadata.file_path").as("file"),
-        explode(array((0 until kHashes).map(i =>
-          bloomBit(col(colName), i, mBits)): _*)).as("bit"))
+    bitSets(spark.read.parquet(dir), col(colName), mBits, kHashes)
+  }
+
+  /** One bit set per file of `scan`: the k salted bit positions of
+    * every `value` (a column, or a generator such as a token explode),
+    * folded into the file's distinct set. Shared by both bloom
+    * flavours' builds and extends, so the bits come from one
+    * definition. */
+  private def bitSets(scan: DataFrame, value: Column, mBits: Int,
+      kHashes: Int): DataFrame =
+    scan.select(col("_metadata.file_path").as("file"), value.as("graft_v"))
+      .select(col("file"), explode(array((0 until kHashes).map(i =>
+        bloomBit(col("graft_v"), i, mBits)): _*)).as("bit"))
       .groupBy("file")
       .agg(collect_set(col("bit")).as("bits"))
+
+  /** Index rows for the files of `dir` absent from `index`, built by
+    * `build` over a scan of just those files and appended — per-file
+    * bit sets are immutable, so existing rows are reused verbatim. */
+  private def extendBitSets(spark: org.apache.spark.sql.SparkSession,
+      dir: String, index: DataFrame)(build: DataFrame => DataFrame): DataFrame = {
+    val fresh = newDataFiles(spark, dir, index)
+    if (fresh.isEmpty) index
+    else index.unionAll(build(spark.read.parquet(fresh.toIndexedSeq: _*)))
+      // planner-scale rows; the groupBy's exchange keeps the hashing
+      // distributed — only the final tiny agg + union run single-task
+      // (persisted extend-chains otherwise snowball part files)
+      .coalesce(1)
   }
+
+  /** Whether a bloom index row's bit set holds all k positions of `v`. */
+  private def bloomHit(v: Column, mBits: Int, kHashes: Int): Column =
+    (0 until kHashes)
+      .map(i => array_contains(col("bits"), bloomBit(v, i, mBits)))
+      .reduce(_ && _)
 
   /** Sentinel row name under which a SELF-DESCRIBING bloom index stores
     * its own (mBits, kHashes) — a value that can never collide with a
@@ -1469,8 +1470,8 @@ object Layout {
     * `mBits = nextPow2(bitsPerKey × maxKeys)` (floor 4096, cap 2²⁴ ≈
     * 2 MB of set bits per full file), and appends a sentinel row
     * (`file = "_graft_bloom_meta"`, `bits = [mBits, kHashes]`) so
-    * [[bloomReadSelf]] / `ScanPruneRewrite.registerBloomsSelf` probe
-    * with exactly the build's parameters — the mismatch class is
+    * [[joinSkipFilesBloom]] / `ScanPruneRewrite.registerBloomsSelf`
+    * probe with exactly the build's parameters — the mismatch class is
     * structurally gone. approx_count_distinct only affects SIZING
     * (±5% error moves the power-of-two rounding, never correctness). */
   def bloomIndexSized(spark: org.apache.spark.sql.SparkSession,
@@ -1508,18 +1509,6 @@ object Layout {
         (s(0).toInt, s(1).toInt)
       }
 
-  /** [[bloomRead]] against a self-describing [[bloomIndexSized]] index:
-    * probe parameters come from the index's own sentinel row, so they
-    * cannot disagree with the build. */
-  def bloomReadSelf(spark: org.apache.spark.sql.SparkSession, dir: String,
-      index: DataFrame, colName: String, value: Column): DataFrame = {
-    val (m, k) = bloomMeta(index).getOrElse(throw new IllegalArgumentException(
-      "index carries no _graft_bloom_meta row — built with plain " +
-        "bloomIndex? pass its sizes to bloomRead explicitly"))
-    bloomRead(spark, dir, index.filter(col("file") =!= BloomMetaKey),
-      colName, value, m, k)
-  }
-
   /** Bit position `i` of a value under the engine-portable salted h64.
     * `private[graft]` so [[graft.plans.ScanPruneRewrite]] can evaluate
     * the SAME expression driver-side for its bloom admission — the bit
@@ -1538,32 +1527,8 @@ object Layout {
     * stay live on a growing table. */
   def extendBloomIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       index: DataFrame, colName: String, mBits: Int = 4096,
-      kHashes: Int = 3): DataFrame = {
-    val fresh = newDataFiles(spark, dir, index)
-    if (fresh.isEmpty) index
-    else index.unionAll(
-      spark.read.parquet(fresh.toIndexedSeq: _*)
-        .select(col("_metadata.file_path").as("file"),
-          explode(array((0 until kHashes).map(i =>
-            bloomBit(col(colName), i, mBits)): _*)).as("bit"))
-        .groupBy("file")
-        .agg(collect_set(col("bit")).as("bits")))
-      // planner-scale rows; the groupBy's exchange keeps the hashing
-      // distributed — only the final tiny agg + union run single-task
-      // (persisted extend-chains otherwise snowball part files)
-      .coalesce(1)
-  }
-
-  /** [[extendBloomIndex]] for a self-describing [[bloomIndexSized]]
-    * index: new files hash with exactly the build's parameters (read
-    * from the sentinel row, which the extension preserves). */
-  def extendBloomIndexSelf(spark: org.apache.spark.sql.SparkSession,
-      dir: String, index: DataFrame, colName: String): DataFrame = {
-    val (m, k) = bloomMeta(index).getOrElse(throw new IllegalArgumentException(
-      "index carries no _graft_bloom_meta row — built with plain " +
-        "bloomIndex? use extendBloomIndex with its explicit sizes"))
-    extendBloomIndex(spark, dir, index, colName, m, k)
-  }
+      kHashes: Int = 3): DataFrame =
+    extendBitSets(spark, dir, index)(bitSets(_, col(colName), mBits, kHashes))
 
   /** Point-lookup scan through a [[bloomIndex]]: keep only files whose
     * bit set contains ALL k positions of `value`, then scan those files
@@ -1575,10 +1540,8 @@ object Layout {
   def bloomRead(spark: org.apache.spark.sql.SparkSession, dir: String,
       index: DataFrame, colName: String, value: Column,
       mBits: Int = 4096, kHashes: Int = 3): DataFrame = {
-    val hit = (0 until kHashes)
-      .map(i => array_contains(col("bits"), bloomBit(value, i, mBits)))
-      .reduce(_ && _)
-    val keep = index.filter(hit).select("file").collect().map(_.getString(0))
+    val keep = index.filter(bloomHit(value, mBits, kHashes))
+      .select("file").collect().map(_.getString(0))
     explicitIndexRead(spark, dir, keep.toIndexedSeq)
       .filter(col(colName) === value)
   }
@@ -1603,10 +1566,7 @@ object Layout {
     * key, zero rows) drop out: a null key never equi-joins. */
   def joinSkipFiles(manifest: DataFrame, dimKeys: DataFrame,
       keyCol: String): DataFrame =
-    manifest
-      .join(broadcast(dimKeys.select(col(keyCol).as("graft_jk")).distinct()),
-        col("graft_jk") >= col(s"min_$keyCol") &&
-          col("graft_jk") <= col(s"max_$keyCol"), "left_semi")
+    holdsKey(dimKeys.select(col(keyCol)).distinct(), keyCol)(manifest)
       .select("file")
 
   /** [[joinSkipFiles]] against a SELF-DESCRIBING [[bloomIndexSized]]
@@ -1629,73 +1589,42 @@ object Layout {
       "index carries no _graft_bloom_meta row — joinSkipFilesBloom " +
         "requires a self-describing bloomIndexSized index (a plain " +
         "bloomIndex probed with foreign sizes would LOSE matching files)"))
-    val hit = (0 until k)
-      .map(i => array_contains(col("bits"), bloomBit(col("graft_jk"), i, m)))
-      .reduce(_ && _)
     index.filter(col("file") =!= BloomMetaKey)
       .join(broadcast(dimKeys.select(col(keyCol).as("graft_jk")).distinct()),
-        hit, "left_semi")
+        bloomHit(col("graft_jk"), m, k), "left_semi")
       .select("file")
-  }
-
-  /** [[joinSkipFiles]] for a [[statsManifestPartitioned]] (two-level)
-    * layout — join-driven skipping past the flat-manifest ceiling: the
-    * tiny group rollup range-joins the BROADCAST dim keys first, file
-    * rows are read ONLY at surviving `graft_group=` partitions, and the
-    * span-intersecting files among them are the admitted set. Driver
-    * work is O(groups-touched · groupSize) paths — the same bound as
-    * every grouped consumer, so a 10⁷-file fact table absorbs a
-    * star-join probe without any consumer collecting its listing
-    * (mirrors [[deletionVectorsForKeysGrouped]]'s shape exactly). */
-  def joinSkipFilesGrouped(spark: org.apache.spark.sql.SparkSession,
-      manifestDir: String, dimKeys: DataFrame,
-      keyCol: String): Seq[String] = {
-    val k = broadcast(dimKeys.select(col(keyCol).as("graft_jk")).distinct())
-    def hit = col("graft_jk") >= col(s"min_$keyCol") &&
-      col("graft_jk") <= col(s"max_$keyCol")
-    val gids = spark.read.parquet(s"$manifestDir/groups")
-      .join(k, hit, "left_semi")
-      .select("graft_group").collect().map(_.getInt(0))
-    if (gids.isEmpty) Seq.empty
-    else spark.read.parquet(s"$manifestDir/files")
-      .filter(col("graft_group").isin(gids.toIndexedSeq: _*))
-      .join(k, hit, "left_semi")
-      .select("file").collect().map(_.getString(0)).toIndexedSeq
-  }
-
-  /** [[joinSkipRead]] through the grouped manifest: the inner/semi
-    * equi-join over this read is row-identical to the full-scan join,
-    * and no consumer ever collects the whole file listing. */
-  def joinSkipReadGrouped(spark: org.apache.spark.sql.SparkSession,
-      dir: String, manifestDir: String, dimKeys: DataFrame,
-      keyCol: String): DataFrame = {
-    val files = joinSkipFilesGrouped(spark, manifestDir, dimKeys, keyCol)
-    explicitIndexRead(spark, dir, files)
   }
 
   /** The join-pruned fact scan: read ONLY the files [[joinSkipFiles]]
     * admits (further intersected with a Bloom admission when `bloom`
     * carries a [[bloomIndexSized]] index — range and Bloom evidence
     * compose by AND, since each alone is a no-false-negative filter).
+    * With a manifest the admitted rows plan the scan like every other
+    * manifest read (zero-listing when they carry bytes; on a
+    * [[Manifest.TwoLevel]] the rollup is probed first, so no consumer
+    * collects the whole listing).
     * The caller's equi-join on `keyCol` lands on top unchanged; for
     * inner/semi joins the result is row-identical to joining the full
     * scan (spec-proven across clustered and scattered layouts). Use
     * [[BloomPrune.prunedJoin]] above this read to also drop
     * non-matching ROWS inside admitted files before the exchange. */
   def joinSkipRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-      manifest: Option[DataFrame], bloom: Option[DataFrame],
+      manifest: Option[Manifest], bloom: Option[DataFrame],
       dimKeys: DataFrame, keyCol: String): DataFrame = {
     require(manifest.nonEmpty || bloom.nonEmpty,
       "joinSkipRead needs a stats manifest, a bloom index, or both")
-    // two consumers when both indexes are present — pin the key set
+    // two consumers when both indexes are present (and two probes on a
+    // two-level manifest) — pin the key set
     val keys = dimKeys.select(col(keyCol)).distinct().ckpt
-    val admitted = Seq(
-      manifest.map(m => joinSkipFiles(m, keys, keyCol)),
-      bloom.map(b => joinSkipFilesBloom(b, keys, keyCol))).flatten
-    val files = admitted
-      .map(_.collect().map(_.getString(0)).toSet)
-      .reduce(_ intersect _)
-    explicitIndexRead(spark, dir, files.toSeq.sorted)
+    val bloomFiles = bloom.map(b => joinSkipFilesBloom(b, keys, keyCol)
+      .collect().map(_.getString(0)).toSet)
+    manifest match {
+      case Some(m) =>
+        val admitted = admit(spark, m, holdsKey(keys, keyCol))
+        scan(spark, dir, bloomFiles.fold(admitted)(f =>
+          admitted.filter(col("file").isInCollection(f))))
+      case None => explicitIndexRead(spark, dir, bloomFiles.get.toSeq.sorted)
+    }
   }
 
   /** FULL-TEXT file skipping: a per-file Bloom filter over the TOKEN
@@ -1717,16 +1646,12 @@ object Layout {
   def tokenBloomIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       textCol: String, mBits: Int = 65536, kHashes: Int = 3): DataFrame = {
     require(mBits > 0 && kHashes >= 1, s"need mBits > 0, kHashes >= 1")
-    spark.read.parquet(dir)
-      .select(col("_metadata.file_path").as("file"),
-        explode(array_distinct(
-          graft.functions.TextFunctions.tokens(col(textCol)))).as("tok"))
-      .select(col("file"),
-        explode(array((0 until kHashes).map(i =>
-          bloomBit(col("tok"), i, mBits)): _*)).as("bit"))
-      .groupBy("file")
-      .agg(collect_set(col("bit")).as("bits"))
+    bitSets(spark.read.parquet(dir), distinctTokens(textCol), mBits, kHashes)
   }
+
+  /** Each document's distinct normalized tokens, one row per token. */
+  private def distinctTokens(textCol: String): Column =
+    explode(array_distinct(graft.functions.TextFunctions.tokens(col(textCol))))
 
   /** Incrementally maintain a [[tokenBloomIndex]] after new files land —
     * [[extendBloomIndex]]'s exact contract (per-file bit sets are
@@ -1734,22 +1659,9 @@ object Layout {
     * spec-proven), for the token domain. */
   def extendTokenBloomIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, index: DataFrame, textCol: String,
-      mBits: Int = 65536, kHashes: Int = 3): DataFrame = {
-    val fresh = newDataFiles(spark, dir, index)
-    if (fresh.isEmpty) index
-    else index.unionAll(
-      spark.read.parquet(fresh.toIndexedSeq: _*)
-        .select(col("_metadata.file_path").as("file"),
-          explode(array_distinct(
-            graft.functions.TextFunctions.tokens(col(textCol)))).as("tok"))
-        .select(col("file"),
-          explode(array((0 until kHashes).map(i =>
-            bloomBit(col("tok"), i, mBits)): _*)).as("bit"))
-        .groupBy("file")
-        .agg(collect_set(col("bit")).as("bits")))
-      // same single-task persist rationale as [[extendBloomIndex]]
-      .coalesce(1)
-  }
+      mBits: Int = 65536, kHashes: Int = 3): DataFrame =
+    extendBitSets(spark, dir, index)(
+      bitSets(_, distinctTokens(textCol), mBits, kHashes))
 
   /** Token search through a [[tokenBloomIndex]]: scan only the files
     * whose bit set admits the term, then apply the EXACT token-
@@ -1763,35 +1675,26 @@ object Layout {
       index: DataFrame, textCol: String, term: String,
       mBits: Int = 65536, kHashes: Int = 3): DataFrame = {
     val probe = lower(trim(lit(term)))
-    val hit = (0 until kHashes)
-      .map(i => array_contains(col("bits"), bloomBit(probe, i, mBits)))
-      .reduce(_ && _)
-    val keep = index.filter(hit).select("file").collect().map(_.getString(0))
+    val keep = index.filter(bloomHit(probe, mBits, kHashes))
+      .select("file").collect().map(_.getString(0))
     explicitIndexRead(spark, dir, keep.toIndexedSeq)
       .filter(array_contains(
         graft.functions.TextFunctions.tokens(col(textCol)), probe))
   }
 
   /** [[tokenBloomRead]] over a DV-mutated table — full-text search that
-    * honors row-level takedowns: the bloom prunes files, the DV
-    * broadcast anti-join removes deleted rows from the admitted scans,
-    * and the exact token predicate lands last. The GDPR-correct search
+    * honors row-level takedowns: the bloom prunes files, the exact token
+    * predicate filters the admitted scans, and the DV broadcast
+    * anti-join removes deleted rows. The GDPR-correct search
     * path: a removed document stops matching the moment its DV row
     * lands, no index rebuild — the bloom may admit its file (bits are
     * never unset; same false-positive economics as any bloom hit), but
     * its rows can never surface. */
   def tokenBloomReadWithDeletes(spark: org.apache.spark.sql.SparkSession,
       dir: String, index: DataFrame, textCol: String, term: String,
-      dv: DataFrame, mBits: Int = 65536, kHashes: Int = 3): DataFrame = {
-    val probe = lower(trim(lit(term)))
-    val hit = (0 until kHashes)
-      .map(i => array_contains(col("bits"), bloomBit(probe, i, mBits)))
-      .reduce(_ && _)
-    val keep = index.filter(hit).select("file").collect().map(_.getString(0))
-    applyDv(explicitIndexRead(spark, dir, keep.toIndexedSeq), dv)
-      .filter(array_contains(
-        graft.functions.TextFunctions.tokens(col(textCol)), probe))
-  }
+      dv: DataFrame, mBits: Int = 65536, kHashes: Int = 3): DataFrame =
+    applyDv(tokenBloomRead(spark, dir, index, textCol, term, mBits, kHashes),
+      dv)
 
   /** DV COMPACTION — the rewrite half of the deletion-vector contract
     * [[readWithDeletes]] documents: a file whose deleted fraction
@@ -1843,13 +1746,7 @@ object Layout {
     if (hot.nonEmpty) {
       val hotFiles = hot.map(_._1).toIndexedSeq
       val hotDv = dvFrozen.filter(col("file").isin(hotFiles: _*))
-      spark.read.parquet(hotFiles: _*)
-        .withColumn("graft_dv_file", col("_metadata.file_path"))
-        .withColumn("graft_dv_pos", col("_metadata.row_index"))
-        .join(broadcast(hotDv.select(col("file").as("graft_dv_file"),
-          col("pos").as("graft_dv_pos"))),
-          Seq("graft_dv_file", "graft_dv_pos"), "left_anti")
-        .drop("graft_dv_file", "graft_dv_pos")
+      applyDv(spark.read.parquet(hotFiles: _*), hotDv)
         .write.mode("append").parquet(outDir)
     }
     // residual DV: cold files' rows, re-addressed at their copied
@@ -1991,26 +1888,7 @@ object Layout {
     * leans on). */
   def deletionVectorsForKeys(spark: org.apache.spark.sql.SparkSession,
       dir: String, keys: DataFrame, keyCol: String): DataFrame =
-    spark.read.parquet(dir)
-      // _metadata resolves only against the scan itself — project the
-      // address BEFORE the join or analysis fails
-      .select(col(keyCol), col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("pos"))
-      .join(broadcast(keys.select(col(keyCol))), Seq(keyCol), "left_semi")
-      .select("file", "pos")
-
-  /** The data files whose [min, max] key span can contain at least one
-    * of `keys` — the planner-scale prune behind
-    * [[deletionVectorsForKeysPruned]]: manifest rows (O(#files)) range-
-    * join the BROADCAST key batch (delta-scale by contract); zero-row
-    * entries carry null stats and drop out naturally. */
-  def keyTouchedFiles(manifest: DataFrame, keys: DataFrame,
-      keyCol: String): Seq[String] =
-    manifest
-      .join(broadcast(keys.select(col(keyCol).as("graft_del_k"))),
-        col("graft_del_k") >= col(s"min_$keyCol") &&
-          col("graft_del_k") <= col(s"max_$keyCol"), "left_semi")
-      .select("file").collect().map(_.getString(0)).toIndexedSeq
+    addressesOf(spark.read.parquet(dir), keys, keyCol)
 
   /** [[deletionVectorsForKeys]] with the address-resolution scan PRUNED
     * through the table's stats manifest: only files whose key span
@@ -2020,82 +1898,34 @@ object Layout {
     * skipping); against a clustered layout this makes the erase
     * pipeline's per-wave cost O(touched files), not O(table) — the
     * difference between a GDPR feed that gets cheaper as the layout
-    * improves and one that re-reads 100 TB per wave. Result ≡ the
-    * unpruned variant exactly (spec-proven): min/max pruning has no
-    * false negatives, and the same broadcast semi-join lands last. */
+    * improves and one that re-reads 100 TB per wave. Over a
+    * [[Manifest.TwoLevel]] the rollup range-joins the key batch first,
+    * so a 10⁷-file table absorbs a scattered key wave without any
+    * consumer collecting its full listing. The scan plans with ZERO
+    * filesystem calls when the admitted rows carry exact `bytes`
+    * ([[graft.io.ManifestFileIndex]]); the explicit-path read (which
+    * stat-lists every touched file — 0.6 s for q122's 300-file wave) is
+    * only the legacy/byte-less fallback, and `_metadata` renders paths
+    * identically under both plans, so recorded addresses are
+    * byte-identical. Result ≡ the unpruned variant exactly
+    * (spec-proven): min/max pruning has no false negatives, and the
+    * same broadcast semi-join lands last. */
   def deletionVectorsForKeysPruned(spark: org.apache.spark.sql.SparkSession,
-      dir: String, manifest: DataFrame, keys: DataFrame,
+      dir: String, manifest: Manifest, keys: DataFrame,
       keyCol: String): DataFrame =
-    dvAddressesInManifest(spark, dir,
-      manifest.join(
-        broadcast(keys.select(col(keyCol).as("graft_del_k"))),
-        col("graft_del_k") >= col(s"min_$keyCol") &&
-          col("graft_del_k") <= col(s"max_$keyCol"), "left_semi"),
+    addressesOf(scan(spark, dir, admit(spark, manifest, holdsKey(keys, keyCol))),
       keys, keyCol)
 
-  /** [[deletionVectorsForKeysPruned]] for a [[statsManifestPartitioned]]
-    * (two-level) layout — the takedown path past the flat-manifest
-    * ceiling: the tiny group rollup range-joins the broadcast key
-    * batch first, file rows are read ONLY at the surviving
-    * `graft_group=` partitions, and the span-intersecting files among
-    * them resolve addresses. Driver work is O(groups-touched ·
-    * groupSize) paths, the same bound as every grouped consumer — a
-    * 10⁷-file table absorbs a scattered key wave without any consumer
-    * ever collecting its full listing. Result ≡ the unpruned variant
-    * (spec-proven). */
-  def deletionVectorsForKeysGrouped(spark: org.apache.spark.sql.SparkSession,
-      dir: String, manifestDir: String, keys: DataFrame,
-      keyCol: String): DataFrame = {
-    val k = broadcast(keys.select(col(keyCol).as("graft_del_k")))
-    def hit = col("graft_del_k") >= col(s"min_$keyCol") &&
-      col("graft_del_k") <= col(s"max_$keyCol")
-    val gids = spark.read.parquet(s"$manifestDir/groups")
-      .join(k, hit, "left_semi")
-      .select("graft_group").collect().map(_.getInt(0))
-    if (gids.isEmpty) emptyDvFrame(spark)
-    else dvAddressesInManifest(spark, dir,
-      spark.read.parquet(s"$manifestDir/files")
-        .filter(col("graft_group").isin(gids.toIndexedSeq: _*))
-        .join(k, hit, "left_semi"),
-      keys, keyCol)
-  }
-
-  /** The empty (file, pos) DV frame — shared by the no-touched-files
-    * fast paths. */
-  private def emptyDvFrame(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType))))
-
-  /** Resolve (file, pos) addresses of `keys` within the files an
-    * ADMITTED manifest-row frame names — the shared tail of both
-    * pruned takedown variants. The scan plans with ZERO filesystem
-    * calls when the rows carry exact `bytes`
-    * ([[graft.io.ManifestFileIndex]], same contract as every other
-    * manifest consumer); the explicit-path read (which stat-lists
-    * every touched file — 0.6 s for q122's 300-file wave) is only the
-    * legacy/byte-less fallback. `_metadata` renders paths identically
-    * under both plans, so recorded DV addresses are byte-identical. */
-  private def dvAddressesInManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String, admitted: DataFrame, keys: DataFrame,
-      keyCol: String): DataFrame = {
-    val scan = manifestRead(spark, admitted).getOrElse {
-      val keep = admitted.select("file").collect().map(_.getString(0))
-      if (keep.isEmpty) return emptyDvFrame(spark)
-      explicitFilesRead(spark, dir,
-        admitted.columns.exists(_.startsWith("part_")), keep.toIndexedSeq)
-    }
+  /** The (file, pos) addresses of `keys` within a fresh parquet scan. */
+  private def addressesOf(scan: DataFrame, keys: DataFrame,
+      keyCol: String): DataFrame =
     scan
+      // _metadata resolves only against the scan itself — project the
+      // address BEFORE the join or analysis fails
       .select(col(keyCol), col("_metadata.file_path").as("file"),
         col("_metadata.row_index").as("pos"))
       .join(broadcast(keys.select(col(keyCol))), Seq(keyCol), "left_semi")
       .select("file", "pos")
-  }
 
   /** Merge-on-read scan applying [[deletionVectors]]: the base table is
     * scanned in place and deleted addresses are subtracted by a
@@ -2183,11 +2013,9 @@ object Layout {
     // columns, so the changed-file reads need basePath to resolve them
     // (explicit-leaf reads would fail the outCols select); basePath
     // adds no files — the only-changed-files scan contract holds
-    val partitioned = (newManifest.columns ++ oldManifest.columns)
-      .exists(_.startsWith("part_"))
+    val partitioned = isPartitioned(newManifest) || isPartitioned(oldManifest)
     def readFiles(fs: Seq[String]): DataFrame =
-      if (partitioned) spark.read.option("basePath", dir).parquet(fs: _*)
-      else spark.read.parquet(fs: _*)
+      explicitFilesRead(spark, dir, partitioned, fs)
     // schema from ONE manifest-named footer, not a directory listing:
     // a root-dir read re-lists the whole table per diff call (the same
     // per-probe listing cost the manifest family exists to remove);

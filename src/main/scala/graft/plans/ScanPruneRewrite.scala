@@ -73,8 +73,9 @@ import org.apache.spark.sql.types._
   * passes share one file index. [[scan]] serves a DataFrame over the
   * registered relation itself — the steady-state probe path with no
   * per-query scan construction at all. Past the flat ceiling, the
-  * two-level grouped manifest's explicit API
-  * ([[graft.ops.Layout.prunedReadGrouped]]) remains the read path.
+  * explicit verbs over a two-level manifest
+  * ([[graft.ops.Layout.prunedRead]] with a
+  * [[graft.ops.Layout.Manifest.TwoLevel]]) remain the read path.
   *
   * Registered by `graft.GraftExtensions` for new sessions or
   * [[install]] on a live one; `spark.graft.scanPrune.enabled=false` is

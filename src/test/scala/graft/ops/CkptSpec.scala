@@ -169,6 +169,55 @@ class CkptSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.conf.set(Ckpt.EagerConf, "true")
   }
 
+  /** A table dir holding 10 rows, and whether [[Ckpt.pinnedIfReadsFrom]]
+    * took the pin for a frame (a skipped pin hands back the very same
+    * frame). */
+  private def tableDir(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-pin")
+      .resolve("t").toString
+    spark.range(10).write.parquet(dir)
+    dir
+  }
+  private def pins(df: DataFrame, path: String): Boolean =
+    Ckpt.pinnedIfReadsFrom(df, path) ne df
+
+  test("pinnedIfReadsFrom pins for a relative target path") {
+    val dir = tableDir()
+    val rel = java.nio.file.Paths.get("").toAbsolutePath
+      .relativize(java.nio.file.Paths.get(dir)).toString
+    assert(!rel.startsWith("/"))
+    assert(pins(spark.read.parquet(dir).filter(col("id") > 2), rel))
+  }
+
+  test("pinnedIfReadsFrom pins for a file: spelling of the target") {
+    val dir = tableDir()
+    val uri = new java.io.File(dir).toURI.toString
+    assert(uri.startsWith("file:"))
+    assert(pins(spark.read.parquet(dir).filter(col("id") > 2), uri))
+  }
+
+  test("pinnedIfReadsFrom pins behind a lazy upstream checkpoint") {
+    val dir = tableDir()
+    spark.conf.set(Ckpt.EagerConf, "false")
+    try {
+      // the pending checkpoint is an opaque LogicalRDD: the plan walk
+      // sees no file relation, yet the frame still reads `dir`
+      val derived = Ckpt.pinned(spark.read.parquet(dir)).filter(col("id") > 2)
+      assert(pendingCheckpoints(derived).nonEmpty)
+      assert(pins(derived, dir))
+    } finally spark.conf.set(Ckpt.EagerConf, "true")
+  }
+
+  test("pinnedIfReadsFrom skips a frame that reads an unrelated dir") {
+    val read = tableDir()
+    val target = tableDir()
+    assert(!pins(spark.read.parquet(read).filter(col("id") > 2), target))
+    // a sibling whose name merely extends the target's is unrelated too
+    val sibling = target + "x"
+    spark.range(10).write.parquet(sibling)
+    assert(!pins(spark.read.parquet(sibling), target))
+  }
+
   test("looped operators hand out no pending checkpoints (structural)") {
     val edges = (0L until 300L).map(i => (i % 30, (i * 7 + 1) % 30))
       .filter(e => e._1 != e._2).toDF("src", "dst")

@@ -69,24 +69,27 @@ class DataSkippingSpec extends AnyFunSuite with SparkTestBase {
     assert(meta.get._1 >= 4096 && Integer.bitCount(meta.get._1) == 1)
     // lossless read: probe sizes come from the sentinel
     val probeU = (137L * 2654435761L) % 1000000L
-    val got = Layout.bloomReadSelf(spark, t, loaded, "u", lit(probeU))
-      .select("id").as[Long].collect().toSeq
-    assert(got == Seq(137L))
-    // a plain index refuses the self path instead of probing lossily
+    def bloomProbe(index: org.apache.spark.sql.DataFrame, v: Long): Seq[Long] =
+      Layout.joinSkipRead(spark, t, None, Some(index), Seq(v).toDF("u"), "u")
+        .filter(col("u") === v).select("id").as[Long].collect().toSeq
+    assert(bloomProbe(loaded, probeU) == Seq(137L))
+    // a plain index refuses the self-describing path instead of
+    // probing lossily
     val plain = Layout.bloomIndex(spark, t, "u")
     intercept[IllegalArgumentException] {
-      Layout.bloomReadSelf(spark, t, plain, "u", lit(probeU))
+      bloomProbe(plain, probeU)
     }
-    // extension preserves the sentinel and equals a rebuild
+    // extension with the recorded sizes preserves the sentinel and
+    // equals a rebuild
     spark.range(2000, 2500).select(col("id"),
         ((col("id") * 2654435761L) % 1000000L).as("u"))
       .repartitionByRange(1, col("id"))
       .write.mode("append").parquet(t)
-    val ext = Layout.extendBloomIndexSelf(spark, t, loaded, "u")
+    val ext = Layout.extendBloomIndex(spark, t, loaded, "u",
+      meta.get._1, meta.get._2)
     assert(Layout.bloomMeta(ext) == meta)
     val probe2 = (2250L * 2654435761L) % 1000000L
-    assert(Layout.bloomReadSelf(spark, t, ext, "u", lit(probe2))
-      .select("id").as[Long].collect().toSeq == Seq(2250L))
+    assert(bloomProbe(ext, probe2) == Seq(2250L))
     // the prune rule's self registration probes with the build's sizes
     Layout.statsManifest(spark, t, Seq("id")).write.parquet(s"$root/m")
     Catalog.commit(spark, s"$root/cat", Map("manifest" -> s"$root/m"))
@@ -121,13 +124,13 @@ class DataSkippingSpec extends AnyFunSuite with SparkTestBase {
       .localCheckpoint(eager = true)
     for ((lo, hi) <- Seq((150L, 449L), (0L, 999L), (5000L, 6000L),
         (250L, 250L))) {
-      assert(Layout.countRangeGrouped(spark, dir, root, "k",
-          lit(lo), lit(hi)) ===
+      assert(Layout.countRange(spark, dir, Layout.Manifest.TwoLevel(root),
+          "k", lit(lo), lit(hi)) ===
         Layout.countRange(spark, dir, flat, "k", lit(lo), lit(hi)),
         s"grouped != flat for [$lo, $hi]")
     }
-    assert(Layout.countRangeGrouped(spark, dir, root, "k",
-      lit(150L), lit(449L)) === 300L)
+    assert(Layout.countRange(spark, dir, Layout.Manifest.TwoLevel(root),
+      "k", lit(150L), lit(449L)) === 300L)
   }
 
   test("manifest rows cover every file; min/max/count are exact") {
@@ -595,7 +598,7 @@ class DataSkippingSpec extends AnyFunSuite with SparkTestBase {
     val expected = spark.read.parquet(dir)
       .filter(col("k") >= 120L && col("k") <= 480L)
       .select("k", "v").as[(Long, Long)].collect().sorted
-    val got = Layout.prunedReadGrouped(spark, dir, mfDir, "k",
+    val got = Layout.prunedRead(spark, dir, Layout.Manifest.TwoLevel(mfDir), "k",
         lit(120L), lit(480L))
       .select("k", "v").as[(Long, Long)].collect().sorted
     assert(got.toSeq === expected.toSeq)
@@ -617,7 +620,7 @@ class DataSkippingSpec extends AnyFunSuite with SparkTestBase {
       .count()
     assert(surviving <= 2L, s"expected <=2 surviving groups, got $surviving")
     // and an out-of-range probe touches zero groups but still answers
-    assert(Layout.prunedReadGrouped(spark, dir, mfDir, "k",
+    assert(Layout.prunedRead(spark, dir, Layout.Manifest.TwoLevel(mfDir), "k",
       lit(10000L), lit(20000L)).count() === 0L)
   }
 
@@ -656,14 +659,14 @@ class DataSkippingSpec extends AnyFunSuite with SparkTestBase {
     val expected = spark.read.parquet(dir)
       .filter(col("k") >= 1900L && col("k") <= 2500L)
       .select("k", "v").as[(Long, Long)].collect().sorted
-    val got = Layout.prunedReadGrouped(spark, dir, mfDir, "k",
+    val got = Layout.prunedRead(spark, dir, Layout.Manifest.TwoLevel(mfDir), "k",
         lit(1900L), lit(2500L))
       .select("k", "v").as[(Long, Long)].collect().sorted
     assert(got.toSeq === expected.toSeq)
     val rebuiltDir = freshDir("mfx-rebuilt")
     Layout.statsManifestPartitioned(spark, dir, Seq("k"), rebuiltDir,
       groupSize = 4L)
-    val rebuilt = Layout.prunedReadGrouped(spark, dir, rebuiltDir, "k",
+    val rebuilt = Layout.prunedRead(spark, dir, Layout.Manifest.TwoLevel(rebuiltDir), "k",
         lit(1900L), lit(2500L))
       .select("k", "v").as[(Long, Long)].collect().sorted
     assert(got.toSeq === rebuilt.toSeq)
@@ -694,7 +697,7 @@ class DataSkippingSpec extends AnyFunSuite with SparkTestBase {
       assert(nFiles === expectFiles)
     } finally spark.conf.unset("spark.graft.manifest.maxFiles")
     // zero-row file: null min/max never survives a probe, result exact
-    assert(Layout.prunedReadGrouped(spark, dir, mfDir, "k",
+    assert(Layout.prunedRead(spark, dir, Layout.Manifest.TwoLevel(mfDir), "k",
       lit(0L), lit(50L)).count() === 51L)
   }
 }

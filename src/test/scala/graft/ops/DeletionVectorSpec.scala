@@ -190,7 +190,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestBase {
     val full = Layout.deletionVectorsForKeys(spark, dir, keys, "k")
     assert(canon(pruned) === canon(full) && pruned.count() === 50L)
     // the address-resolution prune is real: 1 of 4 files
-    val touched = Layout.keyTouchedFiles(manifest, keys, "k")
+    val touched = Layout.joinSkipFiles(manifest, keys, "k").collect()
     assert(touched.length === 1, s"expected 1 touched file, got $touched")
     // keys hitting no file's span resolve to an empty DV, zero scans
     val out = Layout.deletionVectorsForKeysPruned(spark, dir, manifest,
@@ -216,12 +216,13 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestBase {
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select(col("file"), col("pos")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    val grouped = Layout.deletionVectorsForKeysGrouped(
-      spark, s"$dir/t", mf, keys, "k")
+    val grouped = Layout.deletionVectorsForKeysPruned(
+      spark, s"$dir/t", Layout.Manifest.TwoLevel(mf), keys, "k")
     val full = Layout.deletionVectorsForKeys(spark, s"$dir/t", keys, "k")
     assert(canon(grouped) === canon(full) && grouped.count() === 110L)
     // out-of-span keys: empty frame with the DV schema
-    val none = Layout.deletionVectorsForKeysGrouped(spark, s"$dir/t", mf,
+    val none = Layout.deletionVectorsForKeysPruned(spark, s"$dir/t",
+      Layout.Manifest.TwoLevel(mf),
       spark.range(90000, 90005).select(col("id").as("k")), "k")
     assert(none.count() === 0L)
     assert(none.schema.fieldNames.toSeq === Seq("file", "pos"))

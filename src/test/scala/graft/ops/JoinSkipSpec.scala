@@ -113,16 +113,15 @@ class JoinSkipSpec extends AnyFunSuite with SparkTestBase {
     val dim = Seq((100L, "a"), (110L, "b"), (3900L, "c")).toDF("k", "tag")
     val flatFiles = Layout.joinSkipFiles(flat, dim, "k")
       .collect().map(_.getString(0)).toSet
-    val grpFiles = Layout.joinSkipFilesGrouped(spark, s"$root/mf",
-      dim, "k").toSet
-    assert(grpFiles === flatFiles)
-    val pruned = Layout.joinSkipReadGrouped(spark, dir, s"$root/mf",
-      dim, "k").join(dim, Seq("k"))
+    val grouped = Some(Layout.Manifest.TwoLevel(s"$root/mf"))
+    val grpRead = Layout.joinSkipRead(spark, dir, grouped, None, dim, "k")
+    assert(grpRead.inputFiles.toSet === flatFiles)
+    val pruned = grpRead.join(dim, Seq("k"))
     val full = spark.read.parquet(dir).join(dim, Seq("k"))
     assert(pruned.orderBy("k").collect().toSeq
       === full.orderBy("k").collect().toSeq)
     // empty dim: zero groups survive, the read is the empty slice
-    assert(Layout.joinSkipReadGrouped(spark, dir, s"$root/mf",
+    assert(Layout.joinSkipRead(spark, dir, grouped, None,
       dim.filter(col("k") < 0), "k").count() === 0)
   }
 

@@ -112,9 +112,11 @@ class MergeOnReadSpec extends AnyFunSuite with SparkTestBase {
     // the manifest grew by exactly the upsert commit's files, and the
     // rollup still serves pruned reads over old AND new keys
     assert(filesTab.count() > 4)
-    assert(Layout.prunedReadGroupedWithDeletes(spark, data, s"$root/mf",
+    assert(Layout.prunedReadWithDeletes(spark, data,
+      Layout.Manifest.TwoLevel(s"$root/mf"),
       "k", lit(2000L), lit(2000L), dv).count() === 1)
-    assert(Layout.prunedReadGroupedWithDeletes(spark, data, s"$root/mf",
+    assert(Layout.prunedReadWithDeletes(spark, data,
+      Layout.Manifest.TwoLevel(s"$root/mf"),
       "k", lit(6L), lit(6L), dv).count() === 0)
   }
 

@@ -119,7 +119,8 @@ class PartitionedManifestSpec extends AnyFunSuite with SparkTestBase {
     val filesTab = spark.read.parquet(s"$root/mf/files")
     assert(filesTab.columns.contains("part_p"))
     assert(filesTab.filter(col("part_p").isNull).count() === 0)
-    val r = Layout.prunedReadGrouped(spark, t, s"$root/mf", "id",
+    val r = Layout.prunedRead(spark, t,
+      Layout.Manifest.TwoLevel(s"$root/mf"), "id",
       lit(40L), lit(159L))
     assert(r.columns.toSeq === Seq("id", "p"))
     // zero-listing plan with the partition schema intact
@@ -148,7 +149,8 @@ class PartitionedManifestSpec extends AnyFunSuite with SparkTestBase {
     val filesTab = spark.read.parquet(s"$root/mf/files")
     assert(filesTab.count() === 12)
     assert(filesTab.filter(col("part_p").isNull).count() === 0)
-    val r = Layout.prunedReadGrouped(spark, t, s"$root/mf", "id",
+    val r = Layout.prunedRead(spark, t,
+      Layout.Manifest.TwoLevel(s"$root/mf"), "id",
       lit(190L), lit(239L))
     assert(r.columns.toSeq === Seq("id", "p"))
     assert(r.count() === 50)
