@@ -14,10 +14,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order lambdas are interpreted and re-evaluated per consumer;
   * here each row is a single tight loop with one MD5 instance.
   *
-  * Shingle semantics mirror [[TextFunctions.shinglesFromTokens]]:
+  * The shingles are cut by the same builder as the [[Shingles]] kernel
+  * behind [[TextFunctions.shinglesFromTokens]] ([[Shingles.build]]):
   * max(size-n+1, 1) shingles of up to n tokens joined by a space
   * (null tokens skipped like concat_ws), so texts shorter than n yield
   * one shingle and empty token arrays yield the empty-string shingle.
+  * A null token array still yields null here (the default for a unary
+  * kernel), where [[Shingles]] yields `[""]`.
   * With `distinct = true` (the MinHash head) distinctness is over the
   * shingle STRINGS (first occurrence kept), matching `array_distinct`
   * before hashing; with `distinct = false` the output keeps positional
@@ -47,39 +50,21 @@ case class ShingleHash64(child: Expression, n: Int, distinct: Boolean = true)
 
 object ShingleHash64 {
 
-  /** Runtime kernel shared by interpreted eval and generated code. */
+  /** Runtime kernel shared by interpreted eval and generated code. The
+    * shingle strings come from the shared [[Shingles.build]]. */
   def compute(tokens: ArrayData, n: Int, distinct: Boolean): ArrayData = {
-    val size = tokens.numElements()
-    val count = math.max(size - (n - 1), 1)
-    // LinkedHashSet both dedupes and preserves first-occurrence order, so
-    // the distinct path needs it; the positional path keeps every shingle
-    val shingles = new java.util.ArrayList[String](count)
-    val seen = if (distinct) new java.util.LinkedHashSet[String](count * 2) else null
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < count) {
-      sb.setLength(0)
-      var first = true
-      var j = i
-      val end = math.min(i + n, size)
-      while (j < end) {
-        if (!tokens.isNullAt(j)) { // concat_ws skips nulls
-          if (!first) sb.append(' ')
-          sb.append(tokens.getUTF8String(j).toString)
-          first = false
-        }
-        j += 1
-      }
-      if (distinct) seen.add(sb.toString) else shingles.add(sb.toString)
-      i += 1
+    val all = Shingles.build(tokens, n)
+    // LinkedHashSet both dedupes and preserves first-occurrence order
+    val shingles = if (!distinct) all else {
+      val seen = new java.util.LinkedHashSet[UTF8String](all.length * 2)
+      all.foreach(seen.add)
+      seen.toArray(new Array[UTF8String](seen.size))
     }
-    val src: java.util.Collection[String] = if (distinct) seen else shingles
     val md = java.security.MessageDigest.getInstance("MD5")
-    val out = new Array[Long](src.size())
-    val it = src.iterator()
+    val out = new Array[Long](shingles.length)
     var k = 0
-    while (it.hasNext) {
-      out(k) = SimHash60.hash60(md, UTF8String.fromString(it.next()))
+    while (k < out.length) {
+      out(k) = SimHash60.hash60(md, shingles(k))
       k += 1
     }
     new GenericArrayData(out)

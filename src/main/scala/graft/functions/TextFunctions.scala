@@ -31,19 +31,18 @@ object TextFunctions {
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Word n-gram shingles (space-joined) over an ALREADY-TOKENIZED
-    * array column. Texts with fewer than n tokens yield one shingle. */
-  def shinglesFromTokens(toks: Column, n: Int): Column = {
-    val count = greatest(size(toks) - (n - 1), lit(1))
-    transform(sequence(lit(0), count - 1),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-  }
+    * array column, as the codegen'd [[Shingles]] kernel. Texts with
+    * fewer than n tokens yield one shingle. */
+  def shinglesFromTokens(toks: Column, n: Int): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      Shingles(org.apache.spark.sql.graftbridge.ColumnBridge.expression(toks), n))
 
   /** Word n-gram shingles (space-joined) over the token array. A text
     * with fewer than n tokens yields a single shingle of all tokens.
-    * NOTE: evaluates the tokenizer inline — in multi-stage pipelines
-    * tokenize ONCE into a column and use [[shinglesFromTokens]]
-    * (higher-order-function lambdas are interpreted, not codegen'd, so
-    * repeated evaluation is the dominant cost at scale). */
+    * NOTE: the tokenizer is the [[Shingles]] kernel's argument, not a
+    * lambda's captured child, so it runs once per row and call; several
+    * shingle sizes over one text tokenize once each unless the tokens
+    * are projected into a column first. */
   def wordShingles(c: Column, n: Int): Column =
     shinglesFromTokens(tokens(c), n)
 

@@ -76,9 +76,12 @@ object CorpusOps {
   def chunk(df: DataFrame, idCol: String, textCol: String,
       size: Int, stride: Int): DataFrame = {
     require(size > 0 && stride > 0, "size and stride must be positive")
-    val toks = tokens(col(textCol))
+    // tokenize once, before the lambda: a lambda re-evaluates a captured
+    // tokens() once per chunk
+    val toks = col("graft_toks")
     val starts = sequence(lit(1), greatest(org.apache.spark.sql.functions.size(toks), lit(1)), lit(stride))
-    df.select(col(idCol), posexplode(transform(starts,
+    df.select(col(idCol), tokens(col(textCol)).as("graft_toks"))
+      .select(col(idCol), posexplode(transform(starts,
         st => slice(toks, st, lit(size)))).as(Seq("chunk_id", "graft_chunk")))
       .select(col(idCol), col("chunk_id"),
         org.apache.spark.sql.functions.size(col("graft_chunk")).as("n_chunk_tokens"),
@@ -368,14 +371,8 @@ object CorpusOps {
     * single deterministic double op (exact integer inputs), so the
     * result hash-compares across engines. */
   def bigramLm(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // tokenize once behind a barrier — an inlined tokens() would re-run
-    // the regex split per bigram position inside the shingle lambda
-    val tok = df
-      .filter(org.apache.spark.sql.functions.size(tokens(col(textCol))) >= 2)
-      .select(tokens(col(textCol)).as("graft_ts"))
-      .ckpt
-    val big = tok
-      .select(explode(shinglesFromTokens(col("graft_ts"), 2)).as("bigram"))
+    val big = df.select(tokens(col(textCol)).as("graft_ts"))
+      .select(bigrams(col("graft_ts")).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("c12"))
       .withColumn("w1", substring_index(col("bigram"), " ", 1))
       .ckpt // feeds both the prefix aggregate and the join
@@ -385,6 +382,14 @@ object CorpusOps {
         col("c12"), col("c1"),
         (col("c12").cast("double") / col("c1").cast("double")).as("p"))
   }
+
+  /** One row per positional word bigram of a token array; arrays
+    * shorter than 2 tokens explode to nothing. The size test sits inside
+    * the generator rather than in a filter, which the optimizer would
+    * push below the token projection and so tokenize twice. */
+  private def bigrams(toks: Column): Column =
+    explode(when(org.apache.spark.sql.functions.size(toks) >= 2,
+      shinglesFromTokens(toks, 2)))
 
   /** Token vocabulary with global occurrence and document frequencies.
     * One explode feeding two hash aggregates — the (doc, token) pre-
@@ -493,15 +498,9 @@ object CorpusOps {
     * scoring join shuffles only (doc, bigram) pairs. */
   def lmScore(df: DataFrame, idCol: String, textCol: String,
       scale: Long = 1000000000L): DataFrame = {
-    // tokenize ONCE behind a barrier: a HOF lambda re-evaluates its
-    // captured child per element, so an inlined tokens() would re-run
-    // the regex split once per bigram position (the d19/d18 lesson)
-    val tok = df
-      .filter(org.apache.spark.sql.functions.size(tokens(col(textCol))) >= 2)
+    val docBg = df
       .select(col(idCol).as("doc"), tokens(col(textCol)).as("graft_ts"))
-      .ckpt
-    val docBg = tok
-      .select(col("doc"), explode(shinglesFromTokens(col("graft_ts"), 2)).as("bigram"))
+      .select(col("doc"), bigrams(col("graft_ts")).as("bigram"))
       .ckpt
     val c12 = docBg.groupBy("bigram").agg(count(lit(1)).as("c12"))
       .withColumn("w1", substring_index(col("bigram"), " ", 1))
@@ -544,15 +543,6 @@ object CorpusOps {
         min("doc").as("first_doc"), max("doc").as("last_doc"))
   }
 
-  /** Gopher-style repetition signals (Rae et al. 2021 §A1.1, public):
-    * the fraction of the document's word bigrams taken by its single
-    * most frequent bigram, and the fraction of word trigrams whose
-    * trigram occurs more than once. High values flag boilerplate and
-    * degenerate generations. Entirely row-local — n-gram frequencies
-    * fold inside the row via the codegen'd
-    * [[graft.functions.TokenCounts]] kernel, so the operator is a pure
-    * projection: no explode, no shuffle, embarrassingly parallel at any
-    * scale. */
   /** Gopher-style document quality rules (Rae et al. 2021 "Scaling
     * Language Models: ... Gopher", appendix A1.1, public): the
     * document-level filter battery every web-scale corpus pipeline
@@ -609,19 +599,31 @@ object CorpusOps {
         col("r_wordcount") && col("r_meanlen") && col("r_stopwords"))
   }
 
+  /** Gopher-style repetition signals (Rae et al. 2021 §A1.1, public):
+    * the fraction of the document's word bigrams taken by its single
+    * most frequent bigram, and the fraction of word trigrams whose
+    * trigram occurs more than once. High values flag boilerplate and
+    * degenerate generations. Entirely row-local — n-gram frequencies
+    * fold inside the row via the codegen'd
+    * [[graft.functions.TokenCounts]] kernel, so the operator is a pure
+    * projection: no explode, no shuffle, embarrassingly parallel at any
+    * scale. The text tokenizes once per row, and each shingle array is
+    * built once, feeding only its count kernel. */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sz = (c: Column) => org.apache.spark.sql.functions.size(c)
     def frac(num: Column, den: Column): Column =
       when(den === 0, lit(0.0)).otherwise(num.cast("double") / den.cast("double"))
-    val bg = wordShingles(col(textCol), 2)
-    val tg = wordShingles(col(textCol), 3)
-    val topBg = array_max(transform(graft.functions.tokenCounts(bg),
-      x => x.getField("tf")))
-    val dupTg = aggregate(graft.functions.tokenCounts(tg), lit(0L),
+    val toks = col("graft_toks")
+    // an n-shingle array has max(size - (n-1), 1) elements
+    def nShingles(n: Int): Column =
+      greatest(org.apache.spark.sql.functions.size(toks) - (n - 1), lit(1))
+    val topBg = array_max(transform(
+      graft.functions.tokenCounts(shinglesFromTokens(toks, 2)), x => x.getField("tf")))
+    val dupTg = aggregate(graft.functions.tokenCounts(shinglesFromTokens(toks, 3)), lit(0L),
       (acc, x) => acc + when(x.getField("tf") >= 2, x.getField("tf")).otherwise(lit(0L)))
-    df.select(col(idCol),
-      frac(topBg, sz(bg)).as("top_bigram_frac"),
-      frac(dupTg, sz(tg)).as("dup_trigram_frac"))
+    df.select(col(idCol), tokens(col(textCol)).as("graft_toks"))
+      .select(col(idCol),
+        frac(topBg, nShingles(2)).as("top_bigram_frac"),
+        frac(dupTg, nShingles(3)).as("dup_trigram_frac"))
   }
 
   /** Cross-document boilerplate removal (the paragraph-dedup pass of
@@ -645,11 +647,15 @@ object CorpusOps {
     * materializing and shuffling every span string. */
   def removeBoilerplate(df: DataFrame, idCol: String, textCol: String,
       unit: Int = 8, maxDf: Long = 5): DataFrame = {
+    // the spans of the projected graft_toks: tokenize once per row, not
+    // once per span inside the lambda
+    val toks = col("graft_toks")
     val spanTexts = transform(
-      sequence(lit(1), greatest(org.apache.spark.sql.functions.size(tokens(col(textCol))), lit(1)), lit(unit)),
-      st => concat_ws(" ", slice(tokens(col(textCol)), st, lit(unit))))
-    val spans = df.select(col(idCol),
-      posexplode(transform(spanTexts, s => h64(s))).as(Seq("graft_pos", "graft_fp")))
+      sequence(lit(1), greatest(org.apache.spark.sql.functions.size(toks), lit(1)), lit(unit)),
+      st => concat_ws(" ", slice(toks, st, lit(unit))))
+    val spans = df.select(col(idCol), tokens(col(textCol)).as("graft_toks"))
+      .select(col(idCol),
+        posexplode(transform(spanTexts, s => h64(s))).as(Seq("graft_pos", "graft_fp")))
     val boiler = spans.select(col(idCol), col("graft_fp")).distinct()
       .groupBy("graft_fp").agg(count(lit(1)).as("graft_df"))
       .filter(col("graft_df") > maxDf)
@@ -660,10 +666,12 @@ object CorpusOps {
       .agg(count(lit(1)).as("graft_n_kept"),
         array_sort(collect_list(col("graft_pos"))).as("graft_kept"))
     df.join(keptIds, Seq(idCol), "left")
+      .withColumn("graft_toks", tokens(col(textCol)))
+      .withColumn("graft_spans", spanTexts)
       .select(col(idCol),
-        org.apache.spark.sql.functions.size(spanTexts).cast("long").as("n_spans"),
+        org.apache.spark.sql.functions.size(col("graft_spans")).cast("long").as("n_spans"),
         coalesce(col("graft_n_kept"), lit(0L)).as("n_kept"),
-        array_join(org.apache.spark.sql.functions.filter(spanTexts,
+        array_join(org.apache.spark.sql.functions.filter(col("graft_spans"),
           (_, i) => array_contains(
             coalesce(col("graft_kept"), array().cast("array<int>")), i)),
           " ").as("clean_text"))

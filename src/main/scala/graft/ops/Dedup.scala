@@ -613,10 +613,9 @@ object Dedup {
       textCol: String,
       shingleSize: Int = 3,
       tau: Double = 0.6): DataFrame = {
-    // shingle hashing runs in the scan stage — spread a narrow
-    // (tiny-file) input first or it serializes on the file count
-    // (guide §2.5; no-op on an at-scale scan)
-    val sets = Skew.spreadNarrowInput(df)
+    // no Skew.spreadNarrowInput here: on d33 (sf0.1, local[32] on 4
+    // vCPUs) its extra shuffle cost more than the wider hashing stage saved
+    val sets = df
       .select(col(idCol).cast("long").as("doc_id"),
         graft.functions.shingleHash64(tokens(col(textCol)), shingleSize).as("hashes"))
       .ckpt // prefix build + verification joins

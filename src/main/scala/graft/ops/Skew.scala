@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities (SURVEY.md §7 "100 TB posture").
@@ -45,10 +49,38 @@ object Skew {
     * already carries parallelism — at table scale a scan has thousands
     * of splits and this must never inject a payload shuffle. The
     * round-robin repartition is deterministic-safe here because every
-    * consumer aggregates or joins on keys, never on row order. */
+    * consumer aggregates or joins on keys, never on row order. The
+    * width comes from the plan ([[scanWidth]]), so the check launches
+    * no job. */
   def spreadNarrowInput(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 < want) df.repartition(want) else df
+    if (scanWidth(df) * 2 < want) df.repartition(want) else df
+  }
+
+  /** The partition count of the stage that reads `df`'s leaves, taken
+    * from the physical plan without executing it (`df.rdd` would run
+    * every upstream shuffle under AQE just to count partitions): a file
+    * scan counts its planned splits, a union sums its children, a join
+    * takes its widest non-broadcast side, a cached relation counts its
+    * cached plan, and a shuffle counts its planned partitions (before
+    * any AQE coalescing, which only happens at run time). */
+  private[ops] def scanWidth(df: DataFrame): Int = {
+    def width(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => width(a.executedPlan)
+      case q: QueryStageExec => width(q.plan) // an already-run frame
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      case e: ShuffleExchangeLike => e.numPartitions
+      case u: UnionExec => u.children.map(width).sum
+      case c: InMemoryTableScanExec => width(c.relation.cachedPlan)
+      case l: LeafExecNode => l.execute().getNumPartitions
+      case other => other.children.filterNot(broadcast).map(width)
+        .maxOption.getOrElse(1)
+    }
+    def broadcast(p: SparkPlan): Boolean = p match {
+      case q: QueryStageExec => broadcast(q.plan)
+      case _ => p.isInstanceOf[BroadcastExchangeLike]
+    }
+    width(df.queryExecution.executedPlan)
   }
 
   /** Two-phase aggregation for high-cardinality-group skew: pre-aggregate

@@ -7,6 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
   import TextFunctions._
+  // the builtin side of the kernel-equivalence tests (wordShingles is
+  // itself the Shingles kernel, so it cannot serve as the reference)
+  import graft.functions.ShinglesSpec.hofShingles
 
   private def one(c: org.apache.spark.sql.Column): Any =
     spark.range(1).select(c).collect().head.get(0)
@@ -29,7 +32,7 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
       "a b", "", "   ", "x Y  z x Y  z", "solo")
     texts.foreach { t =>
       val builtin = one(transform(
-        array_distinct(wordShingles(lit(t), 3)), s => h64(s)))
+        array_distinct(hofShingles(tokens(lit(t)), 3)), s => h64(s)))
         .asInstanceOf[scala.collection.Seq[Long]]
       val kernel = one(graft.functions.shingleHash64(tokens(lit(t)), 3))
         .asInstanceOf[scala.collection.Seq[Long]]
@@ -72,7 +75,7 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
   test("positional shingle_hash64 keeps order and duplicates (winnowing head)") {
     val texts = Seq("a b a b a b", "x y", "", "one two three four")
     texts.foreach { t =>
-      val builtin = one(transform(wordShingles(lit(t), 2), s => h64(s)))
+      val builtin = one(transform(hofShingles(tokens(lit(t)), 2), s => h64(s)))
         .asInstanceOf[scala.collection.Seq[Long]]
       val kernel = one(graft.functions.shingleHashSeq64(tokens(lit(t)), 2))
         .asInstanceOf[scala.collection.Seq[Long]]
@@ -1366,6 +1369,71 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
         sum(col("partial_sum")).as("total"), sum(col("partial_n")).as("n")))
     val want = df.groupBy("k").agg(sum(col("v")).as("total"), count(lit(1)).as("n"))
     assert(result.orderBy("k").collect().toSeq == want.orderBy("k").collect().toSeq)
+  }
+
+  /** Jobs `f` launches on this thread: tags them with a fresh job group,
+    * then runs one sentinel job in the group and waits for its end event,
+    * so every earlier job event has reached the listener (one FIFO bus). */
+  private def jobsLaunchedBy(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          mine.add(e.jobId); started.incrementAndGet()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (mine.contains(e.jobId)) ended.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count probe")
+      try {
+        f
+        sc.parallelize(Seq(1), 1).count() // the sentinel
+      } finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30000000000L
+      while (ended.get < started.get || started.get == 0) {
+        assert(System.nanoTime < deadline, "listener never saw the sentinel job")
+        Thread.sleep(10)
+      }
+      started.get - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("spreadNarrowInput sizes its input from the plan and launches no job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    // one small parquet file, as a corpus fixture table is
+    (0 until 200).map(i => (i.toLong, s"doc $i text ${i % 7}")).toDF("doc_id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents")
+    val docs = spark.read.parquet(s"$dir/documents")
+    // d44_frequent_ngrams reads the table; d33_allpairs_jaccard a union
+    // of it with a perturbed copy; the aggregate needs a shuffle first
+    val d44 = docs
+    val d33 = docs.unionAll(docs.filter(col("doc_id") % 50 === 0)
+      .select((col("doc_id") + 1000000).as("doc_id"),
+        concat(col("text"), lit(" zzz extra suffix")).as("text")))
+    val shuffled = docs.groupBy((col("doc_id") % 3).as("doc_id"))
+      .agg(max("text").as("text"))
+    val want = spark.sparkContext.defaultParallelism
+    for ((name, df) <- Seq("d44" -> d44, "d33" -> d33, "shuffled" -> shuffled)) {
+      var width = -1
+      assert(jobsLaunchedBy { width = Skew.scanWidth(df) } == 0, name)
+      assert(jobsLaunchedBy { Skew.spreadNarrowInput(df) } == 0, name)
+      if (name != "shuffled") {
+        // the width df.rdd reports, so the spread decision is unchanged
+        val old = df.rdd.getNumPartitions
+        assert(width == old, name)
+        assert((width * 2 < want) == (old * 2 < want), name)
+      }
+    }
+    assert(Skew.scanWidth(d44) == 1 && Skew.scanWidth(d33) == 2)
+    assert(Skew.scanWidth(shuffled) == spark.conf.get("spark.sql.shuffle.partitions").toInt)
   }
 }
 
