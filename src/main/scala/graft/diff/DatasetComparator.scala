@@ -1,8 +1,11 @@
 package graft.diff
 
 import graft.schema.{Flattener, SchemaUtils}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -40,34 +43,37 @@ case class DiffOptions(
     allowDuplicates: Boolean = false,
     providedSchema: Option[StructType] = None,
     cache: Boolean = true,
-    /** Single-pass keyed compare: ONE full-outer join on the raw key
-      * columns with inline errCol, instead of the reference-shaped
+    /** One-pass compare, keyed or keyless: both sides co-grouped by key
+      * in ONE aggregate with inline errCol, and ONE action for every
+      * count and array length, instead of the reference-shaped
       * except/except/join/flat-join/join pipeline. Produces the same
-      * result whenever keys are given and duplicates are disallowed
-      * (verified by spec); roughly halves the shuffles — the difference
-      * between 2 wide shuffles and ~6 at 100 TB. Set false to force the
-      * reference-parity plan. */
+      * result whenever duplicates are disallowed (verified by spec and
+      * property); one exchange for the whole diff. Set false to force
+      * the reference-parity plan. */
     fastKeyed: Boolean = true)
 
 /** The diff engine: given a reference and an actual DataFrame, verify
   * schema equivalence, count duplicate keys, compute the symmetric set
-  * difference, join the complements on a synthesized md5 key, flatten
-  * nested structs/arrays, and attribute every mismatching flat column in
-  * an `errCol: array<string>`.
+  * difference, pair the two sides by key, flatten nested structs/arrays,
+  * and attribute every mismatching flat column in an
+  * `errCol: array<string>`.
   *
   * Logical semantics match the reference pipeline
   * (`/root/reference/datasetComparison/.../DatasetComparator.scala:65-141`),
   * including: null-safe per-column equality (`<=>`), DISTINCT semantics of
-  * `except`, reversed errCol ordering, one-sided full-join rows keeping
-  * nulls on the missing side, and keyless mode hashing ALL columns.
+  * `except`, reversed errCol ordering, one-sided rows keeping nulls on the
+  * missing side, and keyless mode hashing ALL columns.
   *
   * Physical plan is deliberately different (designed for 100 TB inputs,
   * see SURVEY.md §4): the reference re-scans both sources for each of its
-  * ≥7 actions and probes each array column with its own job; here the
-  * keyed inputs and the two complements are persisted, row-count +
-  * duplicate-count are fused into ONE aggregate per side, and all array
-  * lengths are probed in one pass per side. Joins stay unhinted so AQE /
-  * Catalyst pick broadcast vs sort-merge from runtime stats.
+  * ≥7 actions and probes each array column with its own job. The default
+  * path (keyed or keyless, duplicates disallowed) is one co-group
+  * aggregate and ONE action: row counts, duplicate keys, the diff counts
+  * and every array length come out of a single `collect`, and the
+  * persisted diff candidates feed the caller's write. The parity path
+  * (`allowDuplicates` or `fastKeyed = false`) persists its keyed inputs
+  * and complements and fuses row-count + duplicate-count into one
+  * aggregate per side.
   */
 class DatasetComparator(
     refDF: DataFrame,
@@ -78,120 +84,118 @@ class DatasetComparator(
 
   def compare(): ComparisonResult = {
     val (refSel, actSel, selector) = alignSchemas()
-    if (fastKeyed && keys.nonEmpty && !allowDuplicates)
-      compareFastKeyed(refSel, actSel, selector)
-    else
-      compareParity(refSel, actSel, selector)
+    if (fastKeyed && !allowDuplicates) compareOnePass(refSel, actSel, selector)
+    else compareParity(refSel, actSel, selector)
   }
 
-  /** One-pass keyed diff: dup-check aggregates (1 per side), then a
-    * single full-outer join on the raw key columns; errCol and the diff
-    * filter are inline expressions over the joined row, so the whole
-    * compare is scan+scan→join→project with no intermediate
-    * materialization. Join stays unhinted: AQE broadcasts a small side
-    * or picks sort-merge from runtime stats. */
-  private def compareFastKeyed(
+  /** One-pass diff: both sides are tagged, unioned and co-grouped by key
+    * in ONE aggregate (raw key columns, or the parity path's md5 of all
+    * columns when no keys are given), so each group holds the key's row
+    * count and first row per side. The row and duplicate-key totals are
+    * observed over every group; only diff candidates (one-sided, or the
+    * two rows differ) are persisted, and a single action over them yields
+    * the diff count, the reference-side diff count and every array length
+    * the flattened errCol needs. */
+  private def compareOnePass(
       refSel: DataFrame, actSel: DataFrame, selector: List[Column]): ComparisonResult = {
-    // Inputs are deliberately NOT persisted: the stats pass below prunes
-    // to the key columns (a cheap columnar scan) and the join re-scans
-    // the full rows once. Two pruned source scans beat materializing the
-    // full input width — at 100 TB a MEMORY_AND_DISK persist of both
-    // sides is a cluster-wide spill that costs more than the scan saved.
-    val refP = refSel
-    val actP = actSel
-    val keyCols = keys.map(nestedCol)
-    // both sides' (rowCount, dupKeyCount) in ONE union-aggregate action
-    val aliasedKeys = keyCols.zipWithIndex.map { case (c, i) => c.as(s"graft_k$i") }
+    val names = refSel.schema.fieldNames.toSeq
+    val q = (n: String) => col(SchemaUtils.quote(n))
+    // keyed: grouping pairs the raw typed key values null-safely — same
+    // null-key semantics as the reference's md5(concat_ws) key, without
+    // string-concat collisions or hashing cost; keyless: that md5 itself
+    val keyCols =
+      if (keys.nonEmpty) keys.map(nestedCol)
+      else Seq(rowHash(names.map(q)))
     val keyNames = keyCols.indices.map(i => col(s"graft_k$i"))
-    val keyed = refP.select(aliasedKeys :+ lit(0).as("graft_side"): _*)
-      .unionAll(actP.select(aliasedKeys :+ lit(1).as("graft_side"): _*))
-    val statsRow = keyed
-      .groupBy(col("graft_side") +: keyNames: _*).agg(count(lit(1)).as("cnt"))
-      .groupBy(col("graft_side")).agg(
-        coalesce(sum(col("cnt")), lit(0L)).as("rows"),
-        count(when(col("cnt") >= 2, 1)).as("dupKeys"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val (refCount, refDups) = statsRow.getOrElse(0, (0L, 0L))
-    val (actCount, actDups) = statsRow.getOrElse(1, (0L, 0L))
+    def tagged(df: DataFrame, side: Int) = df.select(
+      keyCols.zipWithIndex.map { case (c, i) => c.as(s"graft_k$i") } ++
+        Seq(lit(side).as("graft_side"), struct(names.map(q): _*).as("graft_row")): _*)
+    def onSide(side: Int, c: Column) = when(col("graft_side") === side, c)
+    // `first` over a struct plans a sort aggregate; hashing the union on
+    // the key first leaves one exchange and one sort for the whole diff
+    val grouped = tagged(refSel, 0).unionAll(tagged(actSel, 1))
+      .repartition(keyNames: _*)
+      .groupBy(keyNames: _*).agg(
+        count(onSide(0, lit(1))).as("graft_ref_n"),
+        count(onSide(1, lit(1))).as("graft_act_n"),
+        first(onSide(0, col("graft_row")), ignoreNulls = true).as("graft_ref_row"),
+        first(onSide(1, col("graft_row")), ignoreNulls = true).as("graft_act_row"))
+    val totals = Observation()
+    def dupKeys(n: String) = count(when(col(n) >= 2, 1))
+    val observed = grouped.observe(totals,
+      coalesce(sum("graft_ref_n"), lit(0L)).as("refRows"),
+      coalesce(sum("graft_act_n"), lit(0L)).as("actRows"),
+      dupKeys("graft_ref_n").as("refDups"),
+      dupKeys("graft_act_n").as("actDups"))
+
+    // a group is a diff candidate when it is one-sided or its two rows
+    // differ: whole-row `<=>` is the conjunction of every top-level
+    // column's `<=>`, and top-level equal ⟹ every flat accessor into it
+    // is equal. Only candidates are expanded and persisted.
+    val expNames = names.map(n => s"${expectedPrefix}_$n")
+    val actNames = names.map(n => s"${actualPrefix}_$n")
+    val refMark = uniqueColumnName("graft_ref_present", expNames ++ actNames)
+    val actMark = uniqueColumnName("graft_act_present", expNames ++ actNames)
+    val refRow = col("graft_ref_row")
+    val actRow = col("graft_act_row")
+    val candidates = maybePersist(observed
+      .filter(!(refRow <=> actRow))
+      .select(names.zip(expNames).map { case (n, e) => refRow.getField(n).as(e) } ++
+        names.zip(actNames).map { case (n, a) => actRow.getField(n).as(a) } ++
+        Seq(refRow.isNotNull.as(refMark), actRow.isNotNull.as(actMark)): _*))
+
+    // the one action: candidate counts plus every array's max length over
+    // both sides (positions beyond it are null on both sides of every
+    // diff row, so errCol is unchanged)
+    val probes = Flattener.lengthProbes(refSel.schema, expectedPrefix)
+      .zip(Flattener.lengthProbes(refSel.schema, actualPrefix))
+      .map { case ((k, e), (_, a)) => k -> max(greatest(e, a)).cast("int") }
+    val stats = candidates.agg(count(lit(1)), count(when(col(refMark), 1)) +: probes.map(_._2): _*)
+      .collect()(0)
+    val seen = totals.get
+    val Seq(refCount, actCount, refDups, actDups) =
+      Seq("refRows", "actRows", "refDups", "actDups").map(seen(_).asInstanceOf[Long])
+    val (diffCount, refSideDiff) = (stats.getLong(0), stats.getLong(1))
+    if (refDups > 0 || actDups > 0 || diffCount == 0) candidates.unpersist()
     if (refDups > 0 || actDups > 0)
       throw new DuplicateKeysException(refDups, actDups)
+    val lengths = probes.map(_._1).zipWithIndex.map { case (k, i) =>
+      k -> (if (stats.isNullAt(2 + i)) 0 else stats.getInt(2 + i))
+    }.toMap
 
-    // presence markers distinguish one-sided rows from legit all-null
-    // rows after the full join
-    val refMark = uniqueColumnName("graft_ref_present", refSel.schema)
-    val actMark = uniqueColumnName("graft_act_present", actSel.schema)
-    val refPref = prefixed(refP, expectedPrefix, "").withColumn(refMark, lit(true))
-    val actPref = prefixed(actP, actualPrefix, "").withColumn(actMark, lit(true))
-
-    // null-safe equality on the raw typed key values — same null-key
-    // pairing semantics as the reference's md5(concat_ws) key, without
-    // string-concat collisions or hashing cost
-    val joinCond = keys.map { path =>
-      prefixedNestedCol(path, expectedPrefix) <=> prefixedNestedCol(path, actualPrefix)
-    }.reduce(_ && _)
-    val joined = refPref.join(actPref, joinCond, "full_outer")
-
-    // coarse row-diff prefilter: a joined row can only contribute to
-    // errCol if some TOP-LEVEL column pair differs under null-safe
-    // whole-value equality (top-level equal ⟹ every flat accessor into
-    // it is equal), or the row is one-sided. Filtering here means the
-    // array-length probe below and the errCol projection run over diff
-    // candidates ONLY — never a full-input scan. When the diff is empty
-    // this costs nothing beyond the join itself.
-    val q = (n: String) => col(SchemaUtils.quote(n))
-    val allEqual = refSel.schema.fieldNames.toSeq
-      .map(n => q(s"${expectedPrefix}_$n") <=> q(s"${actualPrefix}_$n"))
-      .foldLeft(col(refMark) && col(actMark))(_ && _)
-    // one-sided rows leave the marks null → conjunction null → keep
-    val coarseP = maybePersist(joined.filter(!coalesce(allEqual, lit(false))))
-
-    // flatten select list over the ORIGINAL shape; array lengths probed
-    // on the (persisted, small) diff candidates — same complement-side
-    // probe scope as the parity path. Positions beyond the diff-side max
-    // are null on both sides of every diff row, so errCol is unchanged.
-    // Array-free schemas skip the probe action entirely.
-    val lengths =
-      if (Flattener.hasArrays(refSel.schema)) {
-        def side(prefix: String) = coarseP.select(
-          refSel.schema.fieldNames.toSeq.map(n => q(s"${prefix}_$n").as(n)): _*)
-        Flattener.maxArrayLengths(Seq(side(expectedPrefix), side(actualPrefix)))
-      } else Map.empty[String, Int]
-    val flatNames = refP
+    val flatNames = refSel
       .select(Flattener.flattenSelectList(refSel.schema, lengths): _*)
       .schema.fieldNames.toSeq
     val expFlat = Flattener.flattenSelectList(refSel.schema, lengths, expectedPrefix)
     val actFlat = Flattener.flattenSelectList(refSel.schema, lengths, actualPrefix)
-    val flatPairs = flatNames.lazyZip(expFlat).lazyZip(actFlat).toList
-    val errEntries = flatPairs.reverse.map { case (n, e, a) =>
-      when(e <=> a, array().cast("array<string>")).otherwise(array(lit(n)))
+    // reversed order — reference parity (`DatasetComparator.scala:228`)
+    val errEntries = flatNames.lazyZip(expFlat).lazyZip(actFlat).toList.reverse.map {
+      case (n, e, a) => when(e <=> a, array().cast("array<string>")).otherwise(array(lit(n)))
     }
     val errCol = if (errEntries.isEmpty) array().cast("array<string>")
                  else concat(errEntries: _*)
-
-    val withErr = coarseP
-      .withColumn(errorColumnName, errCol)
-      .filter(size(col(errorColumnName)) > 0)
-    // one action for both counts
-    val cnts = withErr.agg(
-      count(lit(1)).as("diff"),
-      count(when(col(refMark), 1)).as("refSide")).collect()(0)
-    val (diffCount, refSideDiff) = (cnts.getLong(0), cnts.getLong(1))
-    val diffDF = withErr.drop(refMark, actMark)
-    if (diffCount == 0) coarseP.unpersist()
+    val diffDF = candidates.select((expNames ++ actNames).map(q) :+ errCol.as(errorColumnName): _*)
     ComparisonResult(refCount, actCount, refDups, actDups,
       refCount - refSideDiff, selector,
-      if (diffCount == 0) None else Some(diffDF), diffCount)
+      if (diffCount == 0) None else Some(if (cache) narrowed(diffDF) else diffDF), diffCount)
   }
 
-  /** `prefix_root.rest.of.path` accessor for a (possibly nested) key. */
-  private def prefixedNestedCol(path: String, prefix: String): Column = {
-    val parts = path.split('.')
-    parts.tail.foldLeft(col("`" + prefix + "_" + parts.head + "`"))((c, p) => c.getField(p))
+  /** A cached plan keeps its full shuffle width (AQE does not coalesce
+    * it), so a small diff would otherwise be written as one file per
+    * shuffle partition. Narrow to the width AQE would pick: the cached
+    * bytes over the advisory partition size. */
+  private def narrowed(diff: DataFrame): DataFrame = {
+    val bytes = diff.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.sizeInBytesStats.value.longValue
+    }.getOrElse(0L)
+    val advisory = JavaUtils.byteStringAsBytes(
+      diff.sparkSession.conf.get(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key))
+    diff.coalesce(math.max(1L, (bytes + advisory - 1) / advisory).toInt)
   }
 
   private def compareParity(
       refSel: DataFrame, actSel: DataFrame, selector: List[Column]): ComparisonResult = {
-    val keyName = uniqueColumnName("graft_row_key", refSel.schema)
+    val keyName = uniqueColumnName("graft_row_key", refSel.columns.toSeq)
     val refKeyed = maybePersist(addKeyColumn(refSel, keyName))
     val actKeyed = maybePersist(addKeyColumn(actSel, keyName))
 
@@ -259,8 +263,8 @@ class DatasetComparator(
 
   /** `base`, `base_0`, `base_1`, … until collision-free (reference
     * `DatasetComparator.scala:239-254`). */
-  private[diff] def uniqueColumnName(base: String, schemas: StructType*): String = {
-    val taken = schemas.flatMap(_.fieldNames).map(_.toLowerCase).toSet
+  private[diff] def uniqueColumnName(base: String, names: Seq[String]): String = {
+    val taken = names.map(_.toLowerCase).toSet
     if (!taken.contains(base.toLowerCase)) base
     else LazyList.from(0).map(i => s"${base}_$i")
       .find(n => !taken.contains(n.toLowerCase)).get
@@ -273,8 +277,11 @@ class DatasetComparator(
     val keyCols: Seq[Column] =
       if (keys.nonEmpty) keys.map(path => nestedCol(path))
       else df.schema.fieldNames.toSeq.map(n => col("`" + n + "`"))
-    df.withColumn(keyName, md5(concat_ws("|", keyCols.map(_.cast("string")): _*)))
+    df.withColumn(keyName, rowHash(keyCols))
   }
+
+  private def rowHash(cols: Seq[Column]): Column =
+    md5(concat_ws("|", cols.map(_.cast("string")): _*))
 
   private def nestedCol(path: String): Column = {
     val parts = path.split('.')

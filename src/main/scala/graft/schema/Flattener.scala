@@ -70,46 +70,51 @@ object Flattener {
   }
 
   /** Expression: max length of the array at `steps` within one row
-    * (aggregating with array_max across enclosing array elements). */
-  private def probeExpr(dt: DataType, steps: Seq[Step], c: Option[Column]): Column = dt match {
+    * (aggregating with array_max across enclosing array elements).
+    * `top` reads a top-level field. */
+  private def probeExpr(dt: DataType, steps: Seq[Step], c: Option[Column],
+      top: String => Column): Column = dt match {
     case s: StructType =>
       steps.head match {
         case Field(n) =>
-          val nc = c.map(_.getField(n)).getOrElse(topCol(n))
-          probeExpr(s(n).dataType, steps.tail, Some(nc))
+          val nc = c.map(_.getField(n)).getOrElse(top(n))
+          probeExpr(s(n).dataType, steps.tail, Some(nc), top)
         case other => throw new IllegalStateException(s"$other step on struct")
       }
     case ArrayType(et, _) =>
       steps match {
         case Seq() => greatest(coalesce(size(c.get), lit(0)), lit(0))
         case Elem +: rest =>
-          coalesce(array_max(transform(c.get, x => probeExpr(et, rest, Some(x)))), lit(0))
+          coalesce(array_max(transform(c.get, x => probeExpr(et, rest, Some(x), top))), lit(0))
         case other => throw new IllegalStateException(s"bad steps $other on array")
       }
     case other =>
       throw new IllegalStateException(s"probe path hits scalar $other")
   }
 
-  /** Does the schema contain any array column (at any depth)? Callers
-    * use this to skip the probe action entirely on array-free shapes. */
-  def hasArrays(schema: StructType): Boolean =
-    arrayPaths(schema, Nil).nonEmpty
+  /** Per-row length probes, one per array path at any depth: the
+    * probe-lookup key [[flattenSelectList]] reads, and the max length of
+    * that array within one row (0 for null or empty). Aggregating `max`
+    * over each probe yields the lengths map; the diff engine folds these
+    * into its own aggregate. `rootPrefix` reads the top-level attribute
+    * `prefix_name`, as in [[flattenSelectList]]. */
+  def lengthProbes(schema: StructType, rootPrefix: String = ""): Seq[(String, Column)] = {
+    val top = (n: String) => topCol(if (rootPrefix.isEmpty) n else s"${rootPrefix}_$n")
+    arrayPaths(schema, Nil).map(p => pathKey(p) -> probeExpr(schema, p, None, top))
+  }
 
   /** One aggregate pass over each DataFrame: max length per array path,
-    * combined across all supplied DataFrames (the diff engine probes both
-    * complements together — reference `DatasetComparator.scala:126-128`). */
+    * combined across all supplied DataFrames. */
   def maxArrayLengths(dfs: Seq[DataFrame]): Map[String, Int] = {
     require(dfs.nonEmpty)
-    val schema = dfs.head.schema
-    val paths = arrayPaths(schema, Nil)
-    if (paths.isEmpty) return Map.empty
-    val keys = paths.map(pathKey)
+    val probes = lengthProbes(dfs.head.schema)
+    if (probes.isEmpty) return Map.empty
     val perDf: Seq[Seq[Int]] = dfs.map { df =>
-      val aggs = paths.map(p => max(probeExpr(df.schema, p, None)).cast("int"))
+      val aggs = probes.map { case (_, p) => max(p).cast("int") }
       val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      keys.indices.map(i => if (row.isNullAt(i)) 0 else row.getInt(i))
+      probes.indices.map(i => if (row.isNullAt(i)) 0 else row.getInt(i))
     }
-    keys.zipWithIndex.map { case (k, i) => k -> perDf.map(_(i)).max }.toMap
+    probes.map(_._1).zipWithIndex.map { case (k, i) => k -> perDf.map(_(i)).max }.toMap
   }
 
   /** The flat select list for `schema`, given probed array lengths.

@@ -45,15 +45,54 @@ object PropertySpec extends Properties("graft") {
         ab.refRowCount == ba.newRowCount && ab.newRowCount == ba.refRowCount
     }
 
+  /** A reference table and an actual one derived from it: each row kept,
+    * dropped or renamed, plus a few new rows. */
+  private val pairGen = for {
+    a <- tableGen
+    fates <- Gen.listOfN(a.size, Gen.oneOf(0, 0, 1, 2))
+    extra <- Gen.listOfN(3, rowGen)
+  } yield (a, a.zip(fates).collect {
+    case (r, 0) => r
+    case ((id, name, amount), 2) => (id, name + "~", amount)
+  } ++ extra.map { case (id, name, amount) => (id + 2000, name, amount) }.distinctBy(_._1))
+
+  /** Both modes on the same inputs agree on every count and on the
+    * sorted set of diff rows. */
+  private def modesAgree(ref: org.apache.spark.sql.DataFrame,
+      act: org.apache.spark.sql.DataFrame, keys: Seq[String]): Boolean = {
+    val fast = new DatasetComparator(ref, act,
+      DiffOptions(keys = keys, fastKeyed = true)).compare()
+    val parity = new DatasetComparator(ref, act,
+      DiffOptions(keys = keys, fastKeyed = false)).compare()
+    def rows(r: graft.diff.ComparisonResult) = r.resultDF.map { d =>
+      d.select(d.columns.sorted.map(d.col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+    }
+    fast.refRowCount == parity.refRowCount && fast.newRowCount == parity.newRowCount &&
+      fast.diffCount == parity.diffCount && fast.passedCount == parity.passedCount &&
+      rows(fast) == rows(parity)
+  }
+
   property("fast and parity keyed modes agree on diffCount/passedCount") =
-    forAll(tableGen, tableGen) { (a, b) =>
-      val dfA = a.toDF("id", "name", "amount")
-      val dfB = b.toDF("id", "name", "amount")
-      val fast = new DatasetComparator(dfA, dfB,
-        DiffOptions(keys = Seq("id"), fastKeyed = true)).compare()
-      val parity = new DatasetComparator(dfA, dfB,
-        DiffOptions(keys = Seq("id"), fastKeyed = false)).compare()
-      fast.diffCount == parity.diffCount && fast.passedCount == parity.passedCount
+    forAll(pairGen) { case (a, b) =>
+      modesAgree(a.toDF("id", "name", "amount"), b.toDF("id", "name", "amount"), Seq("id"))
+    }
+
+  property("fast and parity keyless modes agree") =
+    forAll(pairGen) { case (a, b) =>
+      modesAgree(a.toDF("id", "name", "amount"), b.toDF("id", "name", "amount"), Nil)
+    }
+
+  /** Null keys, and arrays that are null, empty or end in a null element:
+    * rows that differ while every flat column agrees. */
+  private val edgeRowsGen = Gen.listOfN(6, Gen.zip(
+    Gen.option(Gen.choose(0, 4)),
+    Gen.oneOf[Option[Seq[Option[String]]]](None, Some(Nil), Some(Seq(Some("a"))),
+      Some(Seq(Some("a"), None)), Some(Seq(None)), Some(Seq(Some("a"), Some("b"))))))
+    .map(_.distinctBy(_._1))
+
+  property("fast and parity modes agree on null keys and edge arrays") =
+    forAll(edgeRowsGen, edgeRowsGen) { (a, b) =>
+      modesAgree(a.toDF("id", "items"), b.toDF("id", "items"), Seq("id"))
     }
 
   property("flattening a struct-free DataFrame is the identity projection") =

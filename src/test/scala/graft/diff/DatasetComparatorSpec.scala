@@ -1,7 +1,11 @@
 package graft.diff
 
 import graft.SparkTestBase
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -238,5 +242,162 @@ class DatasetComparatorSpec extends AnyFunSuite with SparkTestBase {
     assert(json.contains("\"refRowCount\": 3"))
     assert(json.contains("\"diffCount\": 1"))
     assert(json.contains("\"passed\": false"))
+  }
+
+  /** Both modes' results, compared on the counts and the sorted row set. */
+  private def assertFastEqualsParity(ref: DataFrame, act: DataFrame, keys: Seq[String]): Unit = {
+    val fast = new DatasetComparator(ref, act, DiffOptions(keys = keys)).compare()
+    val parity = new DatasetComparator(ref, act,
+      DiffOptions(keys = keys, fastKeyed = false)).compare()
+    assert(parity.diffCount > 0, "fixture must differ")
+    assert((fast.refRowCount, fast.newRowCount, fast.diffCount, fast.passedCount) ==
+      (parity.refRowCount, parity.newRowCount, parity.diffCount, parity.passedCount))
+    def rows(r: ComparisonResult) = r.resultDF.map { d =>
+      d.select(d.columns.sorted.map(d.col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+    }
+    assert(rows(fast) == rows(parity))
+  }
+
+  // Diff rows whose errCol is empty: the rows differ, but no flat column
+  // does. The parity path reports them; so must the default path.
+  test("a reference-only row whose key and values are all null is reported") {
+    val ref = df(base + " UNION ALL SELECT NULL, NULL, NULL")
+    assertFastEqualsParity(ref, df(base), Seq("id"))
+  }
+
+  test("an empty array against a null array is reported") {
+    val ref = df("SELECT 1 AS id, CAST(array() AS array<string>) AS items " +
+      "UNION ALL SELECT 2, array('y')")
+    val act = df("SELECT 1 AS id, CAST(NULL AS array<string>) AS items " +
+      "UNION ALL SELECT 2, array('y')")
+    assertFastEqualsParity(ref, act, Seq("id"))
+  }
+
+  test("an array gaining a trailing null element is reported") {
+    val ref = df("SELECT 1 AS id, array('x') AS items UNION ALL SELECT 2, array('y')")
+    val act = df("SELECT 1 AS id, array('x', NULL) AS items UNION ALL SELECT 2, array('y')")
+    assertFastEqualsParity(ref, act, Seq("id"))
+  }
+
+  test("keyless one-pass diff equals the parity path") {
+    val actual =
+      """SELECT * FROM VALUES
+        | (1, 'alice', 10.5), (2, 'bob', 20.0), (3, 'carol', 31.75), (5, NULL, NULL)
+        | AS t(id, name, amount)""".stripMargin
+    assertFastEqualsParity(df(base), df(actual), Nil)
+  }
+
+  test("uncached one-pass diff recomputes the same rows on every read") {
+    val actual =
+      """SELECT * FROM VALUES
+        | (1, 'alice', 10.5), (2, 'bobby', 21.0), (4, 'dave', 11.25)
+        | AS t(id, name, amount)""".stripMargin
+    val r = new DatasetComparator(df(base), df(actual),
+      DiffOptions(keys = Seq("id"), cache = false)).compare()
+    assert(r.diffCount == 3 && r.passedCount == 1 && r.refRowCount == 3)
+    val rows = r.resultDF.get.collect().map(_.toString).sorted.toSeq
+    assert(rows.size == 3)
+    assert(r.resultDF.get.collect().map(_.toString).sorted.toSeq == rows)
+  }
+
+  /** `f`'s result and the number of SQL executions it ran: tags them
+    * with a fresh job group, then runs one sentinel execution in the group
+    * and waits for its end event, so every earlier event has reached the
+    * listener (one FIFO bus). */
+  private def executionsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-sql-${System.nanoTime}"
+    val sentinel = s"$group-sentinel"
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    @volatile var sentinelId = -1L
+    @volatile var sentinelDone = false
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          if (s.description == sentinel) sentinelId = s.executionId
+          else mine.add(s.executionId)
+        case e: SparkListenerSQLExecutionEnd if e.executionId == sentinelId =>
+          sentinelDone = true
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "execution count probe")
+      val out = try {
+        val out = f
+        sc.setJobDescription(sentinel)
+        spark.range(1).collect()
+        out
+      } finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30000000000L
+      while (!sentinelDone) {
+        assert(System.nanoTime < deadline, "listener never saw the sentinel execution")
+        Thread.sleep(10)
+      }
+      (out, mine.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("compare runs exactly one SQL execution; the diff's write reads the cache") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-onepass").toString
+    def parquet(name: String, sql: String): DataFrame = {
+      df(sql).write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val ref = parquet("ref", base)
+    val act = parquet("act",
+      "SELECT * FROM VALUES (1, 'alice', 10.5), (2, 'bobby', 21.0), (4, 'dave', 11.25) " +
+        "AS t(id, name, amount)")
+    val nestedRef = parquet("nref",
+      "SELECT 1 AS id, array(named_struct('n', 'x'), named_struct('n', 'y')) AS b " +
+        "UNION ALL SELECT 2, array(named_struct('n', 'z'))")
+    val nestedAct = parquet("nact",
+      "SELECT 1 AS id, array(named_struct('n', 'x')) AS b " +
+        "UNION ALL SELECT 2, array(named_struct('n', 'z'))")
+    val ps = StructType(ref.schema.fields.filter(_.name != "amount"))
+    val cases: Seq[(String, () => ComparisonResult)] = Seq(
+      "keyed" -> (() => new DatasetComparator(ref, act, DiffOptions(keys = Seq("id"))).compare()),
+      "keyless" -> (() => new DatasetComparator(ref, act, DiffOptions()).compare()),
+      "nested-array" -> (() =>
+        new DatasetComparator(nestedRef, nestedAct, DiffOptions(keys = Seq("id"))).compare()),
+      "provided-schema" -> (() => new DatasetComparator(ref, act,
+        DiffOptions(keys = Seq("id"), providedSchema = Some(ps))).compare()),
+      "identical" -> (() =>
+        new DatasetComparator(ref, ref, DiffOptions(keys = Seq("id"))).compare()))
+    cases.foreach { case (name, run) =>
+      val (r, n) = executionsOf(run())
+      assert(n == 1, s"$name: $n SQL executions")
+      r.resultDF.foreach { d =>
+        val plan = d.queryExecution.sparkPlan
+        assert(plan.collect { case s: InMemoryTableScanExec => s }.nonEmpty, s"$name:\n$plan")
+        assert(plan.collect { case s: FileSourceScanExec => s }.isEmpty, s"$name:\n$plan")
+      }
+    }
+    val dup = parquet("dup", base + " UNION ALL SELECT 1, 'alice2', 99.0")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val (e, n) = executionsOf(intercept[DuplicateKeysException] {
+      new DatasetComparator(dup, ref, DiffOptions(keys = Seq("id"))).compare()
+    })
+    assert(n == 1 && e.refDuplicates == 1 && e.newDuplicates == 0)
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "the duplicate-key throw unpersists its candidates")
+  }
+
+  test("a small diff is written as one part file at any shuffle width") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-narrow").toString
+    val actual =
+      """SELECT * FROM VALUES
+        | (1, 'alice', 10.5), (2, 'bobby', 21.0), (4, 'dave', 11.25)
+        | AS t(id, name, amount)""".stripMargin
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try {
+      val r = new DatasetComparator(df(base), df(actual), DiffOptions(keys = Seq("id"))).compare()
+      assert(r.diffCount == 3)
+      r.resultDF.get.write.parquet(s"$dir/out")
+      val parts = new java.io.File(s"$dir/out").list().filter(_.startsWith("part-"))
+      assert(parts.length == 1, parts.mkString(", "))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 }

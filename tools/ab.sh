@@ -7,6 +7,10 @@
 # Exports the ref's committed files into a fresh temp dir (git archive:
 # the committed tree in a new directory, which is also how a commit's
 # benchmark is judged, and which leaves the repository's .git untouched).
+# That dir's absolute path has the same length as the working tree's:
+# lake_cycle's manifests store absolute file paths, so a longer path
+# alone moves its write_amp by about 0.001. Where no such path can be
+# made under $TMPDIR, it warns and uses a longer one.
 # Then, per workload and seed, runs
 #   python3 perfbench/run.py --workload W --seed S --seconds 10 --trace 0
 # once in the ref tree and once in the working tree, swapping which side
@@ -23,11 +27,20 @@ if [ $# -lt 3 ]; then
   exit 2
 fi
 ref=$1; workloads=$2; shift 2
-root=$(cd "$(dirname "$0")/.." && pwd)
+root=$(cd "$(dirname "$0")/.." && pwd -P)
 tmp=$(mktemp -d "${TMPDIR:-/tmp}/graft-ab.XXXXXX")
-trap 'rm -rf "$tmp"' EXIT
-mkdir "$tmp/tree"
-git -C "$root" archive --format=tar "$ref" | tar -x -C "$tmp/tree"
+base=$(cd "${TMPDIR:-/tmp}" && pwd -P)
+pad=$(( ${#root} - ${#base} - 1 ))
+if [ "$pad" -ge 3 ] && tree=$(mktemp -d "$base/$(printf 'X%.0s' $(seq "$pad"))"); then
+  :
+else
+  tree="$tmp/tree"
+  mkdir "$tree"
+  echo "warning: parent tree path ($tree) is longer than $root;" \
+    "a lake_cycle write_amp move of ±0.001 is path noise" >&2
+fi
+trap 'rm -rf "$tmp" "$tree"' EXIT
+git -C "$root" archive --format=tar "$ref" | tar -x -C "$tree"
 echo "parent = $ref ($(git -C "$root" rev-parse --short "$ref")), change = working tree" >&2
 
 runs="$tmp/runs.jsonl"
@@ -48,9 +61,9 @@ i=0
 for w in ${workloads//,/ }; do
   for s in "$@"; do
     if [ $((i % 2)) -eq 0 ]; then
-      one parent "$tmp/tree" "$w" "$s"; one change "$root" "$w" "$s"
+      one parent "$tree" "$w" "$s"; one change "$root" "$w" "$s"
     else
-      one change "$root" "$w" "$s"; one parent "$tmp/tree" "$w" "$s"
+      one change "$root" "$w" "$s"; one parent "$tree" "$w" "$s"
     fi
     i=$((i + 1))
   done
