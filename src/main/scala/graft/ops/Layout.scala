@@ -1,8 +1,18 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.ops.Ckpt.CkptSyntax
+import scala.jdk.CollectionConverters._
 import scala.language.implicitConversions
 
 /** Multi-dimensional data layout via Z-order (Morton) curves: interleave
@@ -368,8 +378,7 @@ object Layout {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
     require(minRowsPerFile > 0, "minRowsPerFile must be positive")
     requireEmptyOutDir(spark, outDir, "compactSmall")
-    refusePartitioned(spark, inDir, "compactSmall")
-    val perFile = spark.read.parquet(inDir)
+    val perFile = refusePartitioned(spark, inDir, "compactSmall")
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(count(lit(1)).as("n_rows"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -389,7 +398,8 @@ object Layout {
       val rows = small.map(_._2).sum
       val nFiles = math.max(1,
         ((rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt)
-      spark.read.parquet(small.map(_._1).toIndexedSeq: _*)
+      explicitFilesRead(spark, inDir, partitioned = false,
+          small.map(_._1).toIndexedSeq)
         .repartitionByRange(nFiles, col(sortCol))
         .sortWithinPartitions(sortCol)
         .write.mode("append").parquet(outDir)
@@ -417,10 +427,11 @@ object Layout {
       deleteCol: String = "is_delete"): Int = {
     requireEmptyOutDir(spark, outDir, "mergeIntoLayout")
     refusePartitioned(spark, inDir, "mergeIntoLayout")
+    // driver-local rows (statsManifest's contract): probed and diffed
+    // below without re-running the stats
     val manifest = statsManifest(spark, inDir, Seq(keyCol))
       .select(col("file"), col(s"min_$keyCol").as("graft_lo"),
         col(s"max_$keyCol").as("graft_hi"))
-      .localCheckpoint(eager = true) // pinned: listed once, probed + diffed
     val touched = broadcast(manifest)
       .join(changes.select(col(keyCol).as("graft_k")),
         col("graft_k") >= col("graft_lo") && col("graft_k") <= col("graft_hi"),
@@ -439,9 +450,8 @@ object Layout {
         new org.apache.hadoop.fs.Path(outPath, src.getName),
         false, true, conf)
     }
-    val base =
-      if (touched.isEmpty) spark.read.parquet(inDir).limit(0)
-      else spark.read.parquet(touched.toIndexedSeq: _*)
+    val base = explicitFilesRead(spark, inDir, partitioned = false,
+      touched.toIndexedSeq)
     val merged = Merge.applyChanges(base, changes, keyCol, deleteCol)
     merged.repartitionByRange(math.max(1, touched.length), col(keyCol))
       .sortWithinPartitions(keyCol)
@@ -600,6 +610,11 @@ object Layout {
     * predicates. On a 100 TB table the manifest is O(#files) rows —
     * planner-scale, not data-scale.
     *
+    * The table opens with one listing and one footer read ([[openDir]],
+    * no inference job) and the stats are ONE action ([[fileStats]]):
+    * the returned manifest is a driver-local frame of at most
+    * `spark.graft.manifest.maxFiles` rows, not a checkpoint.
+    *
     * Built over layouts from [[compact]] / [[zorderLayout]], the
     * per-file ranges are tight and non-overlapping, which is what makes
     * [[prunedRead]] selective.
@@ -607,7 +622,7 @@ object Layout {
   def statsManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one stats column")
-    val scan = spark.read.parquet(dir)
+    val scan = openDir(spark, dir)
     // ceiling check BEFORE the stats aggregate: the scan's file-index
     // snapshot is already resolved driver-side, so the count is free
     checkManifestCeiling(spark, scan.inputFiles.length.toLong, dir)
@@ -617,9 +632,8 @@ object Layout {
     // writes one part-file per upstream partition and every re-read
     // pays per-file open/footer cost (guide §6 output sizing; the
     // Iceberg posture: manifests are written single-threaded). The
-    // stats aggregate itself still ran distributed (checkpointed
-    // inside fileStats); only the already-materialized rows funnel
-    // into one task.
+    // stats aggregate itself still ran distributed (collected inside
+    // fileStats); only the driver-local rows funnel into one task.
     fileStats(scan, scan.inputFiles.toSeq, cols).coalesce(1)
   }
 
@@ -633,27 +647,32 @@ object Layout {
     *
     * `files` is the set the scan covers: each one the aggregate emits
     * no row for is a zero-row file and gets a synthesized entry
-    * ([[withZeroRowEntries]]). It must come from the scan's OWN
+    * ([[zeroRowEntries]]). It must come from the scan's OWN
     * file-index snapshot (inputFiles, or the explicit fresh-file list),
     * never a second directory listing: a file appended while the
     * aggregate runs must stay ABSENT (a later extend picks it up with
     * real stats), not be recorded as a zero-row entry that pruned reads
-    * would skip forever. */
+    * would skip forever.
+    *
+    * ONE action: the aggregate's rows are collected once, the zero-row
+    * diff runs over them, and the result is a driver-local frame
+    * (`createDataFrame`) that consumers probe repeatedly without a job
+    * or a checkpoint. The rows are O(#files) planner metadata, bounded
+    * by the `spark.graft.manifest.maxFiles` ceiling — the same paths
+    * the zero-row diff has always collected to the driver. */
   private def fileStats(scan: DataFrame, files: Seq[String],
       cols: Seq[String]): DataFrame = {
     val aggs = statsAggs(cols) ++
       partitionColsOf(scan).map(c => first(col(c)).as(s"part_$c"))
-    // eager checkpoint: the zero-row diff below lists the stats' file
-    // column, and every consumer probes the manifest repeatedly — the
-    // aggregate is O(#files) rows, so pinning it is planner-scale
     val stats = scan
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint(eager = true)
-    val statsFiles = stats.select("file").collect()
-      .map(r => uriPath(r.getString(0))).toSet
-    withZeroRowEntries(stats,
-      files.filterNot(p => statsFiles.contains(uriPath(p))))
+    val rows = stats.collect()
+    val statsFiles = rows.map(r => uriPath(r.getString(0))).toSet
+    val missing = files.filterNot(p => statsFiles.contains(uriPath(p)))
+    scan.sparkSession.createDataFrame(java.util.Arrays.asList(
+      rows ++ zeroRowEntries(scan.sparkSession, stats.schema, missing): _*),
+      stats.schema)
   }
 
   /** MANIFEST-OF-MANIFESTS — the read path past the flat ceiling. The
@@ -694,7 +713,7 @@ object Layout {
       groupSize: Long = 8192L): DataFrame = {
     require(cols.nonEmpty, "need at least one stats column")
     require(groupSize > 0, s"groupSize must be positive, got $groupSize")
-    val scan = spark.read.parquet(dir)
+    val scan = openDir(spark, dir)
     // partition tuples are recorded exactly as the flat build does, and
     // the two-level reads share [[scan]], so snapshot reads reconstruct
     // partition columns with zero listings here too. A build is
@@ -855,35 +874,22 @@ object Layout {
     * null min/max never match a range probe, and `nulls(0) < n_rows(0)`
     * is false, so both pruned-read paths skip the file (correct — it
     * has no rows to lose). */
-  private def withZeroRowEntries(stats: DataFrame,
-      missing: Seq[String]): DataFrame = {
-    if (missing.isEmpty) stats
-    else {
-      val spark = stats.sparkSession
-      import spark.implicits._
-      // a zero-row file still has a real length (schema-only footer) —
-      // stat it here, once, at build time, so the all-bytes-known
-      // invariant the zero-listing read path needs stays intact.
-      // O(#zero-row files) driver stats, normally zero.
-      val conf = spark.sparkContext.hadoopConfiguration
-      def sizeOf(p: String): Long =
-        graft.io.PathResolver.fsFor(p, conf)
-          .getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen
-      val synth = stats.schema.fields.filterNot(_.name == "file")
-        .foldLeft(missing.toDF("file")) { (d, f) =>
-          d.withColumn(f.name,
-            if (f.name == "n_rows" || f.name.startsWith("nulls_"))
-              lit(0L).cast(f.dataType)
-            else if (f.name == "bytes")
-              // tiny literal map: one when-chain over the missing files
-              missing.foldLeft(lit(null).cast(f.dataType)) { (acc, p) =>
-                when(col("file") === p, lit(sizeOf(p))).otherwise(acc)
-              }
-            else lit(null).cast(f.dataType))
-        }
-        .select(stats.columns.map(col).toIndexedSeq: _*)
-      stats.unionAll(synth)
-    }
+  private def zeroRowEntries(spark: org.apache.spark.sql.SparkSession,
+      schema: StructType,
+      missing: Seq[String]): Seq[org.apache.spark.sql.Row] = {
+    // a zero-row file still has a real length (schema-only footer) —
+    // stat it here, once, at build time, so the all-bytes-known
+    // invariant the zero-listing read path needs stays intact.
+    // O(#zero-row files) driver stats, normally zero.
+    val conf = spark.sparkContext.hadoopConfiguration
+    def sizeOf(p: String): Long =
+      graft.io.PathResolver.fsFor(p, conf).getFileStatus(new Path(p)).getLen
+    missing.map(p => org.apache.spark.sql.Row.fromSeq(schema.fieldNames.toSeq.map {
+      case "file" => p
+      case "bytes" => sizeOf(p)
+      case n if n == "n_rows" || n.startsWith("nulls_") => 0L
+      case _ => null
+    }))
   }
 
   /** The scan's hive partition columns (empty for flat tables). */
@@ -895,8 +901,9 @@ object Layout {
     * flat output. [[compact]] is the partitioned-table path: its full
     * rewrite materializes the partition columns into the output files. */
   private def refusePartitioned(spark: org.apache.spark.sql.SparkSession,
-      inDir: String, op: String): Unit = {
-    val parts = partitionColsOf(spark.read.parquet(inDir))
+      inDir: String, op: String): DataFrame = {
+    val scan = openDir(spark, inDir)
+    val parts = partitionColsOf(scan)
     require(parts.isEmpty,
       s"$op cannot stream-copy files of a hive-partitioned table ($inDir " +
         s"is partitioned by ${parts.mkString(", ")}): copied leaf bytes do " +
@@ -904,17 +911,11 @@ object Layout {
         "read those rows with NULL partition columns. Use compact (a full " +
         "rewrite materializes the partition columns) or run per partition " +
         "directory.")
+    scan
   }
 
   private def partitionColsOf(df: DataFrame): Seq[String] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.partitionSchema.map(_.name).toSeq
-          case _ => Seq.empty[String]
-        }
-    }.getOrElse(Seq.empty)
+    fsRelation(df).toSeq.flatMap(_.partitionSchema.map(_.name))
 
   private def statsAggs(cols: Seq[String]): Seq[Column] =
     count(lit(1)).as("n_rows") +:
@@ -1217,10 +1218,8 @@ object Layout {
     * silently drop still resolve against the `col=value` dirs. */
   private def explicitFilesRead(spark: org.apache.spark.sql.SparkSession,
       dir: String, partitioned: Boolean, files: Seq[String]): DataFrame =
-    if (files.isEmpty) spark.read.parquet(dir).limit(0)
-    else if (partitioned)
-      spark.read.option("basePath", dir).parquet(files: _*)
-    else spark.read.parquet(files: _*)
+    if (files.isEmpty) openDir(spark, dir).limit(0)
+    else openPaths(spark, files, if (partitioned) Some(dir) else None)
 
   /** [[explicitFilesRead]] for index consumers whose index carries no
     * partition tuples (bloom / join-skip file lists): a partitioned
@@ -1273,28 +1272,144 @@ object Layout {
   }
 
   /** A parquet DataFrame over exactly these `(path, length)` pairs,
-    * planned with zero filesystem calls ([[graft.io.ManifestFileIndex]];
-    * schema from one footer — partition columns, when given, come from
-    * the manifest's recorded tuples and are appended after the data
-    * columns exactly as a root-dir read would). */
+    * planned with zero filesystem calls ([[graft.io.ManifestFileIndex]])
+    * and no Spark job: the schema is the driver-side [[footerSchema]] of
+    * the first file, the only filesystem touch. Partition columns, when
+    * given, come from the manifest's recorded tuples and are appended
+    * after the data columns exactly as a root-dir read would. */
   private def manifestScan(spark: org.apache.spark.sql.SparkSession,
       files: Seq[(String, Long)],
-      partSchema: org.apache.spark.sql.types.StructType =
-        org.apache.spark.sql.types.StructType(Nil),
+      partSchema: StructType = StructType(Nil),
       partValues: Seq[org.apache.spark.sql.catalyst.InternalRow] = Nil)
       : DataFrame = {
-    val schema = spark.read.parquet(files.head._1).schema
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+    val (head, len) = files.head
+    parquetRelation(spark,
       new graft.io.ManifestFileIndex(spark, files, partSchema, partValues),
-      partitionSchema = partSchema,
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new org.apache.spark.sql.execution.datasources
-        .parquet.ParquetFileFormat(),
-      options = Map.empty)(cs)
-    cs.baseRelationToDataFrame(rel)
+      footerSchema(spark, new FileStatus(len, false, 1, 0L, 0L, new Path(head))))
   }
+
+  /** The parquet DataFrame over `index` with `dataSchema` — the relation
+    * `spark.read.parquet` builds after inference, and the one
+    * constructor [[manifestScan]] and [[openPaths]] share. Partition
+    * columns are the index's own. */
+  private def parquetRelation(spark: org.apache.spark.sql.SparkSession,
+      index: FileIndex, dataSchema: StructType): DataFrame = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    cs.baseRelationToDataFrame(HadoopFsRelation(index,
+      partitionSchema = index.partitionSchema,
+      dataSchema = dataSchema,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(cs))
+  }
+
+  /** `file`'s parquet footer, read on the driver — one open, no job. */
+  private def footer(conf: org.apache.hadoop.conf.Configuration,
+      file: FileStatus,
+      filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), filter)
+
+  /** The schema `spark.read.parquet(file).schema` infers, from one
+    * driver-side footer read instead of Spark's one-task inference job.
+    * It is the conversion inference runs: the same converter settings
+    * (binary-as-string, INT96-as-timestamp, timestamp_ntz inference,
+    * nanos-as-long and unknown-type annotations from the session; the
+    * rest at their defaults), Spark's row-metadata key preferred over
+    * the parquet types, and every field nullable, as Spark's reader
+    * declares a file source's data schema. */
+  private[graft] def footerSchema(spark: org.apache.spark.sql.SparkSession,
+      file: FileStatus): StructType =
+    schemaOf(spark, file.getPath, footer(hadoopConf(spark), file,
+      ParquetMetadataConverter.SKIP_ROW_GROUPS))
+
+  /** [[footerSchema]] of an already-read footer. */
+  private def schemaOf(spark: org.apache.spark.sql.SparkSession, file: Path,
+      meta: ParquetMetadata): StructType = {
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation =
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+    asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, meta), converter)).asInstanceOf[StructType]
+  }
+
+  /** The session's Hadoop conf, the one Spark's own reads list and open
+    * files with (session-level filesystem settings included). */
+  private def hadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+
+  /** `dt` with every field, element and map value nullable (Spark's
+    * `asNullable`, which is not public). */
+  private def asNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** `spark.read.parquet(dir)` without the schema-inference job
+    * ([[openPaths]]). */
+  private[graft] def openDir(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    openPaths(spark, Seq(dir), None)
+
+  /** `spark.read.parquet(paths: _*)` (with `basePath`, when given)
+    * without the schema-inference job: one listing into Spark's own
+    * `InMemoryFileIndex` (partition discovery and types included), then
+    * the [[footerSchema]] of the file inference would read (a
+    * `_common_metadata` or `_metadata` summary first, else the first
+    * data file by path) and the same relation Spark builds. Falls back
+    * to the plain read wherever that read would not come down to one
+    * footer: a glob, a streaming sink's output (`_spark_metadata`),
+    * `mergeSchema` on, no file to read a schema from, or a named file
+    * the listing did not find (the index skips a missing root, where
+    * Spark's read raises its own error). */
+  private def openPaths(spark: org.apache.spark.sql.SparkSession,
+      paths: Seq[String], basePath: Option[String]): DataFrame = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = hadoopConf(spark)
+    val options = basePath.map("basePath" -> _).toMap
+    def plain = spark.read.options(options).parquet(paths: _*)
+    if (cs.sessionState.conf.isParquetSchemaMergingEnabled ||
+        paths.exists(_.exists("{}[]*?\\".contains(_))) ||
+        FileStreamSink.hasMetadata(paths, conf, cs.sessionState.conf))
+      return plain
+    val roots = paths.map { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path)
+    }
+    val index = new InMemoryFileIndex(cs, roots, options, None,
+      FileStatusCache.getOrCreate(cs))
+    val files = index.allFiles().sortBy(_.getPath.toString)
+    val found = roots.length == 1 || roots.forall(files.map(_.getPath).toSet)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !f.getPath.getName.startsWith("_")))
+      .filter(_ => found)
+      .map(f => parquetRelation(spark, index, footerSchema(spark, f)))
+      .getOrElse(plain)
+  }
+
+  /** Data files and lengths of an [[openDir]] (or any file-source)
+    * scan, as its index lists them — no filesystem call. */
+  private def indexedFiles(scan: DataFrame): Seq[FileStatus] =
+    fsRelation(scan).toSeq.flatMap(_.location.listFiles(Nil, Nil))
+      .flatMap(_.files.map(_.fileStatus))
+
+  private def fsRelation(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation
+    }.collect { case fs: HadoopFsRelation => fs }
 
   /** One append COMMIT: write `df` under its own commit directory inside
     * `dir` and return the manifest rows for EXACTLY the files this
@@ -1705,8 +1820,14 @@ object Layout {
     * do exactly this: DVs absorb sparse deletes cheaply, and per-file
     * growth past a threshold triggers that file's rewrite — never a
     * table rewrite. Cost: O(hot files + DV), the [[compactSmall]]
-    * economics. The planner-scale per-file (rows, deletes) panel is
-    * one aggregate each.
+    * economics, and no table scan: `inDir` opens once ([[openDir]]: one
+    * listing, one footer), per-file delete counts come from one
+    * aggregate over the DV, and row counts are read from the footers of
+    * the files the DV touches (one distributed count over just those
+    * files once they pass Spark's parallel-discovery threshold). A file
+    * with no DV row is cold without being read — including a zero-row
+    * file, which is copied. Hot files are rewritten under the schema of
+    * the first of them, as `spark.read.parquet(hot)` would infer it.
     *
     * @return residual DV over `outDir` — `readWithDeletes(outDir,
     *         residual)` equals the fully-deleted table (spec + gate)
@@ -1719,52 +1840,80 @@ object Layout {
     // rebind scans it — a previously-used outDir would double-count
     // rows and rebind DVs against stale part-files. Fail loudly instead.
     requireEmptyOutDir(spark, outDir, "compactDeletes")
-    refusePartitioned(spark, inDir, "compactDeletes")
-    val dvFrozen = dv.ckpt // counted + split below
-    val counts = spark.read.parquet(inDir)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(count(lit(1)).as("n_rows"))
-    val dcounts = dvFrozen.groupBy("file").agg(count(lit(1)).as("n_del"))
-    val perFile = counts.join(dcounts, Seq("file"), "left")
-      .select(col("file"), col("n_rows"), coalesce(col("n_del"), lit(0L)).as("n_del"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val (hot, cold) = perFile.partition { case (_, n, d) =>
-      d > 0 && d.toDouble / n >= rewriteRatio
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
+    val in = refusePartitioned(spark, inDir, "compactDeletes")
+    val dvFrozen = dv.ckpt // counted, split and rebound below
+    // the panel: each DV file, in the DV's own spelling, matched to
+    // inDir's listing by URI path (the DV spells `_metadata`'s `file:/`,
+    // the listing `file:///`); DV rows naming a file outside inDir drop
+    // out here. Sorted by path: the first hot file is the one
+    // `spark.read.parquet(hot)` would infer the schema from.
+    case class Touched(key: String, file: String, status: FileStatus,
+        deletes: Long)
+    val listed = indexedFiles(in).map(f => f.getPath.toUri.getRawPath -> f).toMap
+    val touched = dvFrozen.groupBy(uriPathCol(col("file")))
+      .agg(first(col("file")), count(lit(1))).collect()
+      .flatMap(r => listed.get(r.getString(0))
+        .map(Touched(r.getString(0), r.getString(1), _, r.getLong(2))))
+      .sortBy(_.file).toIndexedSeq
+    def touchedScan(ts: Seq[Touched], schema: StructType): DataFrame =
+      parquetRelation(spark, new graft.io.ManifestFileIndex(spark,
+        ts.map(t => t.file -> t.status.getLen)), schema)
+    // row counts from the touched files' footers, read on the driver up
+    // to Spark's parallel-discovery threshold; past it one distributed
+    // count over just those files, as Spark's own listing switches to a
+    // job there
+    val conf = hadoopConf(spark)
+    val small = touched.length <= spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.parallelPartitionDiscoveryThreshold
+    val footers = if (!small) Map.empty[String, ParquetMetadata]
+      else touched.map(t => t.key ->
+        footer(conf, t.status, ParquetMetadataConverter.NO_FILTER)).toMap
+    val nRows: Map[String, Long] =
+      if (small) footers.map { case (k, m) =>
+        k -> m.getBlocks.asScala.map(_.getRowCount).sum }
+      else touchedScan(touched, in.schema)
+        .groupBy(col("_metadata.file_path").as("file")).count()
+        .select(uriPathCol(col("file")), col("count")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val hot = touched.filter(t =>
+      t.deletes.toDouble / nRows.getOrElse(t.key, 0L) >= rewriteRatio)
+    val hotKeys = hot.map(_.key).toSet
+    val cold = listed.filter { case (k, _) => !hotKeys.contains(k) }.values
+    val outPath = new Path(outDir)
     val outFs = graft.io.PathResolver.fsFor(outDir, conf)
     outFs.mkdirs(outPath)
-    val remapped = cold.map { case (p, _, _) =>
-      val src = new org.apache.hadoop.fs.Path(p)
-      val srcFs = graft.io.PathResolver.fsFor(p, conf)
-      val dst = new org.apache.hadoop.fs.Path(outPath, src.getName)
-      org.apache.hadoop.fs.FileUtil.copy(srcFs, src, outFs, dst,
+    cold.foreach { f =>
+      org.apache.hadoop.fs.FileUtil.copy(f.getPath.getFileSystem(conf),
+        f.getPath, outFs, new Path(outPath, f.getPath.getName),
         false /* keep source */, true /* overwrite */, conf)
-      p -> dst.toString
-    }.toMap
+    }
     if (hot.nonEmpty) {
-      val hotFiles = hot.map(_._1).toIndexedSeq
-      val hotDv = dvFrozen.filter(col("file").isin(hotFiles: _*))
-      applyDv(spark.read.parquet(hotFiles: _*), hotDv)
+      // planned under the DV's spellings (a DV spells each file as the
+      // `_metadata.file_path` of the scan that built it), so the index
+      // renders them back exactly; the schema is the first hot file's
+      // own, as files may differ in physical schema after an evolution
+      val lead = hot.head.status
+      val schema = footers.get(hot.head.key)
+        .fold(footerSchema(spark, lead))(schemaOf(spark, lead.getPath, _))
+      applyDv(touchedScan(hot, schema),
+        dvFrozen.filter(col("file").isInCollection(hot.map(_.file))))
         .write.mode("append").parquet(outDir)
     }
-    // residual DV: cold files' rows, re-addressed at their copied
-    // paths AS THE OUT-DIR SCAN RENDERS THEM — `_metadata.file_path`
+    // residual DV: the touched cold files' rows, re-addressed at their
+    // copied paths AS THE OUT-DIR SCAN RENDERS THEM — `_metadata.file_path`
     // spells paths as URIs while FileSystem paths may drop the scheme,
     // so the rebinding joins on the (unique) file NAME against the out
     // scan's own metadata rather than trusting either rendering
-    import spark.implicits._
-    if (cold.isEmpty) return dvFrozen.filter(lit(false))
+    val touchedCold = touched.map(_.key).toSet -- hotKeys
+    if (touchedCold.isEmpty) return dvFrozen.filter(lit(false))
       .select(col("file"), col("pos"))
-    val coldNames = remapped.keys
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).toSeq
-    val outFiles = spark.read.parquet(outDir)
+    val outFiles = spark.read.schema(in.schema).parquet(outDir)
       .select(col("_metadata.file_path").as("graft_new_file")).distinct()
       .withColumn("graft_name", substring_index(col("graft_new_file"), "/", -1))
     dvFrozen
+      .filter(uriPathCol(col("file")).isInCollection(touchedCold))
       .withColumn("graft_name", substring_index(col("file"), "/", -1))
-      .filter(col("graft_name").isin(coldNames: _*))
       .join(broadcast(outFiles), Seq("graft_name"))
       .select(col("graft_new_file").as("file"), col("pos"))
   }

@@ -265,7 +265,8 @@ object ScanPruneRewrite extends Rule[LogicalPlan] with PredicateHelper {
       version: Option[Int] = None): Int = {
     implicit val s: SparkSession = spark
     val v = version.getOrElse(graft.ops.Versions.current(catalogPath))
-    val manifest = spark.read.parquet(
+    // opened from one footer: no schema-inference job
+    val manifest = graft.ops.Layout.openDir(spark,
       graft.ops.Catalog.ref(spark, catalogPath, v, "manifest"))
     val base = graft.ops.Layout.snapshotRead(spark, dataDir, manifest)
     register(spark, name, base, manifest)

@@ -110,6 +110,10 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestBase {
     assert(got === want)
   }
 
+  private def liveRows(dir: String, dv: org.apache.spark.sql.DataFrame) =
+    Layout.readWithDeletes(spark, dir, dv)
+      .select("k", "v").as[(Long, Long)].collect().sorted.toSeq
+
   test("compactDeletes edge cases: all-cold keeps everything, all-hot rewrites all") {
     val dir = writeTable(400)
     // all-cold: sparse deletes below every threshold → pure copy
@@ -119,6 +123,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestBase {
     val resCold = Layout.compactDeletes(spark, dir, outCold, sparseDv, 0.5)
     assert(fileDigests(outCold) === fileDigests(dir))
     assert(Layout.readWithDeletes(spark, outCold, resCold).count() === 399L)
+    assert(liveRows(outCold, resCold) === liveRows(dir, sparseDv))
     // all-hot: every file crosses the threshold → full rewrite, no DV left
     val denseDv = Layout.deletionVectors(spark, dir, col("k") % 2 === 0)
       .localCheckpoint(eager = true)
@@ -127,6 +132,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestBase {
     assert(resHot.count() === 0L)
     assert(fileDigests(outHot).keySet.intersect(fileDigests(dir).keySet).isEmpty)
     assert(Layout.readWithDeletes(spark, outHot, resHot).count() === 200L)
+    assert(liveRows(outHot, resHot) === liveRows(dir, denseDv))
   }
 
   test("compactDeletes refuses a previously-used outDir (would double-count)") {
@@ -152,6 +158,110 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestBase {
       Layout.compactDeletes(spark, dir, nested, dv, 0.3)
     }
     assert(e2.getMessage.contains(nested))
+  }
+
+  private def rowsPerFile(dir: String): Map[String, Long] =
+    spark.read.parquet(dir).groupBy(col("_metadata.file_name")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("compactDeletes rewrites a file whose deleted fraction is exactly rewriteRatio") {
+    val dir = writeTable(400)
+    // one file with exactly d / n == rewriteRatio rewrites (the test is
+    // >=); the other files' sparser deletes stay below it and copy
+    val counts = rowsPerFile(dir)
+    val (first, n) = counts.minBy(_._1)
+    val d = n / 4
+    val firstKeys = spark.read.parquet(dir)
+      .filter(col("_metadata.file_name") === first)
+      .select(col("k")).as[Long].collect().sorted.take(d.toInt)
+    val pred = col("k").isin(firstKeys: _*) || col("k") === 399L
+    val dv = Layout.deletionVectors(spark, dir, pred).localCheckpoint(eager = true)
+    val out = s"$dir-edge"
+    val residual = Layout.compactDeletes(spark, dir, out, dv, d.toDouble / n)
+    assert(liveRows(out, residual) === liveRows(dir, dv))
+    val outNames = fileDigests(out).keySet
+    assert(!outNames.contains(first), "the file at the ratio must be rewritten")
+    assert((counts.keySet - first).subsetOf(outNames), "the others are copied")
+    assert(residual.count() === 1L)
+  }
+
+  test("compactDeletes ignores DV rows naming files outside inDir, even same-named ones") {
+    val dir = writeTable(400)
+    // a byte copy of the table: every file name repeats outside inDir
+    val twin = s"$dir-twin"
+    new java.io.File(twin).mkdirs()
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath,
+        new java.io.File(twin, f.getName).toPath))
+    val own = Layout.deletionVectors(spark, dir, col("k") % 50 === 0)
+    val foreign = Layout.deletionVectors(spark, twin, col("k") < 200)
+    val dv = own.unionAll(foreign).localCheckpoint(eager = true)
+    val out = s"$dir-out"
+    val residual = Layout.compactDeletes(spark, dir, out, dv, 0.5)
+    assert(fileDigests(out) === fileDigests(dir), "nothing crosses the ratio")
+    assert(liveRows(out, residual) === liveRows(dir, own))
+    assert(residual.count() === own.count())
+  }
+
+  test("compactDeletes copies an untouched zero-row file") {
+    val dir = writeTable(200)
+    spark.range(0).select(col("id").as("k"), col("id").as("v"))
+      .coalesce(1).write.mode("append").parquet(dir)
+    val zero = fileDigests(dir).keySet -- rowsPerFile(dir).keySet
+    assert(zero.size === 1, "the fixture holds one zero-row file")
+    val dv = Layout.deletionVectors(spark, dir, col("k") < 20).localCheckpoint(eager = true)
+    val out = s"$dir-out"
+    val residual = Layout.compactDeletes(spark, dir, out, dv, 0.05)
+    assert(fileDigests(out)(zero.head) === fileDigests(dir)(zero.head))
+    assert(liveRows(out, residual) === liveRows(dir, dv))
+  }
+
+  test("compactDeletes rewrites a hot file under its own schema, not the table's first file's") {
+    val dir = writeTable(200)
+    // a file written after an ADD carries a column the earlier files
+    // lack; renamed to list last, so the table's first file predates it
+    val added = s"$dir-added"
+    spark.range(1000, 1100)
+      .select(col("id").as("k"), (col("id") % 7).as("v"), (col("id") * 3).as("w"))
+      .coalesce(1).write.parquet(added)
+    val src = new java.io.File(added).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(src.toPath,
+      new java.io.File(dir, "part-99999-added.snappy.parquet").toPath)
+    assert(!spark.read.parquet(dir).columns.contains("w"))
+    val dv = Layout.deletionVectors(spark, dir, col("k") >= 1000 && col("k") % 2 === 0)
+      .localCheckpoint(eager = true)
+    val out = s"$dir-out"
+    val residual = Layout.compactDeletes(spark, dir, out, dv, 0.5)
+    assert(residual.count() === 0L)
+    val rewritten = (fileDigests(out).keySet -- fileDigests(dir).keySet).toSeq
+    assert(rewritten.size === 1, "only the added file is hot")
+    val got = spark.read.parquet(s"$out/${rewritten.head}")
+      .select("k", "w").as[(Long, Long)].collect().sorted.toSeq
+    assert(got === (1001L until 1100L by 2).map(k => (k, k * 3)))
+  }
+
+  test("compactDeletes splits the same past the parallel-discovery threshold") {
+    val dir = writeTable(400)
+    // one dense file (hot) and sparse deletes in the others (touched, cold)
+    val first = rowsPerFile(dir).keys.min
+    val dv = Layout.deletionVectors(spark, dir,
+        (col("_metadata.file_name") === first && col("k") % 2 === 0) ||
+          col("k") % 50 === 1)
+      .localCheckpoint(eager = true)
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    def run(out: String) = {
+      val residual = Layout.compactDeletes(spark, dir, out, dv, 0.4)
+      (fileDigests(out).keySet.intersect(fileDigests(dir).keySet),
+        residual.count(), liveRows(out, residual))
+    }
+    val driver = run(s"$dir-driver")
+    // every touched file past the threshold: row counts come from a job
+    spark.conf.set(key, "1")
+    val distributed = try run(s"$dir-job") finally spark.conf.unset(key)
+    assert(distributed === driver)
+    assert(!driver._1.contains(first) && driver._2 > 0L)
+    assert(driver._3 === liveRows(dir, dv))
   }
 
   test("DV upsert: pinned DV + append updates rows without touching files") {

@@ -18,9 +18,11 @@
 # alike. Each tree builds itself on first use. Prints one line per run,
 # then per workload and end-to-end metric: the parent median and
 # interquartile range, the change median, change/parent, and how many
-# pairs the change won (direction from BENCHMARK.json). Removes the temp
-# dir on exit. Never writes under perfbench/ beyond what run.py itself
-# writes (its build, work and results directories).
+# pairs the change won (direction from BENCHMARK.json). Exits 1 when any
+# run, on either side, failed or was incorrect (the summary header names
+# them), else 0. Removes the temp dir on exit. Never writes under
+# perfbench/ beyond what run.py itself writes (its build, work and
+# results directories).
 set -euo pipefail
 if [ $# -lt 3 ]; then
   echo "usage: $0 <git-ref> <workload[,workload...]> <seed...>" >&2
@@ -73,6 +75,7 @@ python3 - "$runs" "$root/BENCHMARK.json" <<'EOF'
 import json, statistics, sys
 runs = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
 better = {m["name"]: m["better"] for m in json.load(open(sys.argv[2]))["end_to_end"]}
+failed = False
 
 def value(v):
     return v.get("value") if isinstance(v, dict) else v
@@ -86,6 +89,7 @@ def quartiles(xs):
 for w in dict.fromkeys(r["workload"] for r in runs):
     rs = [r for r in runs if r["workload"] == w]
     bad = [f'{r["side"]}/{r["seed"]}' for r in rs if not r["run"].get("correct")]
+    failed = failed or bool(bad)
     print(f"== {w}: {len(rs) // 2} pairs" + (f", failed runs: {' '.join(bad)}" if bad else ""))
     print(f'{"metric":<12} {"parent":>10} {"parent IQR":>21} {"change":>10} {"ratio":>6} {"wins":>5}')
     for m, direction in better.items():
@@ -106,4 +110,5 @@ for w in dict.fromkeys(r["workload"] for r in runs):
         ratio = f"{mc / mp:.3f}" if mp else "-"
         print(f"{m:<12} {mp:>10.4g} {f'{lo:.4g}..{hi:.4g}':>21} {mc:>10.4g} {ratio:>6}"
               f" {f'{wins}/{len(pairs)}':>5}")
+sys.exit(1 if failed else 0)
 EOF
